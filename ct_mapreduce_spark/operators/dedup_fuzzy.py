@@ -17,6 +17,9 @@ Tiers, all shuffle-conscious:
                       (pure expressions).
 - dedup_clusters:     connected components over any tier's pairs ->
                       canonical keep/drop groups.
+- incremental_dedup_keep: one batch against a persistent index (exact
+                      hash probe, near-dup probe, within-batch tiers) —
+                      the core of the curate plan and the dedup daemon.
 
 MinHash math: h_i(S) = min_{x in S} hash_i(x) with an independent uniform
 hash per slot; P[h_i(A)=h_i(B)] = J(A,B). Banding with r rows x b bands
@@ -27,6 +30,7 @@ from __future__ import annotations
 
 import hashlib
 import logging
+from typing import Callable
 
 import numpy as np
 import pandas as pd
@@ -36,6 +40,7 @@ from pyspark.sql import types as T
 
 _LOG = logging.getLogger(__name__)
 
+from ct_mapreduce_spark.fsutil import path_exists
 from ct_mapreduce_spark.operators.text import gram_stream, shingles, tokens
 from ct_mapreduce_spark.operators.util import (
     append_v1,
@@ -590,9 +595,12 @@ def minhash_lsh_pairs(
 
     `sigs`: optionally pass a precomputed, MATERIALIZED (doc_id, minhash)
     frame covering exactly `docs` rows (same k/num_hashes/seed) to skip
-    the Python signature pass — the serve paths (streaming dedup_batch,
-    plans/curate.py) sign each batch once and share the frame between
-    the index probe and the within-batch tier.
+    the Python signature pass — incremental_dedup_keep signs each batch
+    once and shares the frame between the index probe and the
+    within-batch tier.
+
+    A doc_id that repeats within `docs` is one document: it is never
+    paired with itself, so a repeated id never drops its own rows.
 
     r = num_hashes/bands rows per band; a pair collides if any band's
     sub-signature matches exactly. Scale shape: explode -> groupBy band
@@ -799,12 +807,18 @@ def minhash_lsh_pairs(
         # former self-join shape shuffled the full banded table TWICE
         # (both sort-merge sides) and re-computed the cap lineage per
         # side (guide §2.4); values are identical — within a cell the
-        # doc_ids are distinct, so sorted i<j enumerates exactly the
+        # doc_ids are made distinct, so sorted i<j enumerates exactly the
         # (doc_a < doc_b) pairs the join emitted.
         members = F.col("_members")
         pair_cells = (
             capped.groupBy("band", "bucket")
-            .agg(F.array_sort(F.collect_list("doc_id")).alias("_members"))
+            # array_distinct: a repeated doc_id would otherwise pair with
+            # itself at est_jaccard 1.0 and drop every one of its rows
+            .agg(
+                F.array_sort(F.array_distinct(F.collect_list("doc_id"))).alias(
+                    "_members"
+                )
+            )
             .where(F.size(members) >= 2)
             .select(
                 F.explode(
@@ -898,7 +912,7 @@ def minhash_dedup_keep(
     its min-id representative in O(corpus) (map-side-combined groupBy,
     no window — a template family would be one skewed window partition)
     and runs the banded tier over REPRESENTATIVES only. Same tier order
-    as the serve paths (plans/curate.py, streaming/dedup_stream.py).
+    as the within-batch half of incremental_dedup_keep.
 
     Declared semantics (what the independent oracle re-derives):
       1. sig-collapse: per exact-signature-vector family, every doc but
@@ -920,7 +934,8 @@ def minhash_dedup_keep(
 
     `sigs`: optional precomputed materialized signature frame carrying
     doc_id, minhash, sig_hash (minhash_signatures output) for exactly
-    `docs` — the share-one-signature-pass protocol of the serve paths.
+    `docs` — the share-one-signature-pass protocol of
+    incremental_dedup_keep.
     """
     if not threshold <= 1.0:
         raise ValueError(
@@ -942,12 +957,13 @@ def minhash_dedup_keep(
     rep_sigs = (
         sigs.join(reps, ["sig_hash", "doc_id"], "left_semi")
         .select("doc_id", "minhash")
-        # LAZY (r15): the pairs operator's saturation-detection count is
-        # the first action and holds this frame exactly once — it
-        # materializes the blocks in the same job; the est joins and the
-        # final keep anti-join then read blocks (one fewer job than the
-        # old eager materialize).
-        .localCheckpoint(eager=False)
+        # LAZY when capping is on (r15): the pairs operator's
+        # saturation-detection count is the first action and holds this
+        # frame exactly once — it materializes the blocks in the same
+        # job; the est joins and the final keep anti-join then read
+        # blocks. Eager when uncapped: the same rule as
+        # minhash_lsh_pairs' own `sigs`.
+        .localCheckpoint(eager=(max_bucket_width is None))
     )
     pairs = minhash_lsh_pairs(
         docs,
@@ -1169,10 +1185,10 @@ def _try_read_parquet(spark, p: str):
     legitimately EMPTY batch (e.g. an all-duplicate micro-batch whose
     keep-list is zero rows) leaves a _SUCCESS-only directory behind,
     and reading it raises UNABLE_TO_INFER_SCHEMA — which must mean
-    'no rows', never a failed trigger."""
-    import os
-
-    if not os.path.exists(p):
+    'no rows', never a failed trigger. The existence check goes through
+    the Hadoop FileSystem API, so file://, hdfs:// and s3a:// index paths
+    read like local ones."""
+    if not path_exists(spark, p):
         return None
     from pyspark.errors.exceptions.captured import AnalysisException
 
@@ -1258,7 +1274,7 @@ def exact_within_drops(
     document in the SAME batch under `hash_col` equality (one
     representative — the min doc_id — survives per hash value; null
     hashes pass through untouched). Map-side-combined min per hash, then
-    an anti-join; O(batch). Serve compositions run this before the
+    an anti-join; O(batch). incremental_dedup_keep runs this before the
     banded within-batch tier for the same reason as the cross-batch hash
     store: a copy-heavy batch otherwise pairs its copies quadratically
     inside identical LSH buckets, and the keep-set is provably unchanged
@@ -1270,9 +1286,9 @@ def exact_within_drops(
     collapse to one representative there too, the same verdict the
     banded tier would give them — callers filter sub-k docs). The
     default stays "content_hash" — the DuckDB-oracle-checkable contract
-    (docs_exact_within_reps); serve paths pass "sig_hash", a superset
-    (equal text implies equal signature). Returns a one-column (doc_id)
-    drop frame."""
+    (docs_exact_within_reps); incremental_dedup_keep passes "sig_hash",
+    a superset (equal text implies equal signature). Returns a
+    one-column (doc_id) drop frame."""
     hashed = sigs.where(F.col(hash_col).isNotNull())
     reps = hashed.groupBy(hash_col).agg(F.min("doc_id").alias("doc_id"))
     return hashed.select("doc_id", hash_col).join(
@@ -1397,6 +1413,113 @@ def minhash_probe_index(
     )
 
 
+def minhash_index_exists(spark, path: str) -> bool:
+    """Whether `path` holds a MinHash index: its posting-list BASE tree
+    (minhash_index_build, compaction) or its INCREMENT tree (the
+    streaming daemon's write_postings). Checked through the Hadoop
+    FileSystem API, so remote and file:// URIs answer like local paths."""
+    return path_exists(spark, f"{path}/banded") or path_exists(
+        spark, f"{path}/banded_inc"
+    )
+
+
+def incremental_dedup_keep(
+    spark,
+    index_path: str,
+    docs: DataFrame,
+    est_threshold: float = 0.9,
+    sigs: DataFrame | None = None,
+    mark: Callable[[str], None] | None = None,
+) -> DataFrame:
+    """One batch's keep-list against a persistent MinHash index — the
+    incremental-dedup core shared by plans/curate.py (one call per crawl
+    drop) and streaming/dedup_stream.py (one call per micro-batch).
+    Every incoming document is checked against everything accepted
+    before it, and the first one seen wins. Tiers, cheapest first:
+
+      1. exact hash probe: drop verbatim copies and signature-identical
+         variants of indexed documents by hash equality (O(batch); equal
+         content has est_jaccard 1.0, so the keep-set is unchanged while
+         the banded tier's quadratic template-bucket work disappears);
+      2. near-dup index probe: drop documents with an indexed candidate
+         at est_jaccard >= est_threshold;
+      3. within-batch exact tier: one min-id representative per
+         signature before anything is paired;
+      4. within-batch banded tier: drop greatest(doc_a, doc_b) of every
+         pair at est_jaccard >= est_threshold (the min id is kept).
+
+    Each tier is a broadcast semi/anti-join of the small batch side
+    against a larger frame. Tiers 1-2 run only when `index_path` holds
+    an index (minhash_index_exists); a first batch runs 3-4 only. The
+    index is never written here: callers fold the survivors in their own
+    layout (minhash_index_build/append, or the daemon's replay-safe
+    write_postings).
+
+    `sigs`: the batch's materialized minhash_signatures frame covering
+    exactly `docs` (which must itself be materialized), shared with the
+    caller's index fold — one Python signature pass per batch. Without
+    it the batch is checkpointed and signed here.
+
+    Materialization posture (each step is the cheapest that still runs
+    upstream work once): the exact-probe survivors are eager; their
+    signatures are lazy (the near probe's bounded prefix collect
+    materializes them); the near-probe survivors are eager; the
+    within-batch signatures are lazy (the pairing build's detection
+    count materializes them); the returned keep-list is eager.
+
+    `mark(stage)` is called as each sub-stage finishes ('exact_probe',
+    'near_probe', 'within') so callers can time the tiers. Returns the
+    surviving rows of `docs`, materialized."""
+    if sigs is None:
+        docs = docs.localCheckpoint(eager=True)
+        sigs = minhash_signatures(fan_out(docs)).localCheckpoint(eager=True)
+
+    def _mark(stage: str) -> None:
+        if mark is not None:
+            mark(stage)
+
+    novel = docs
+    if minhash_index_exists(spark, index_path):
+        exact = exact_hash_probe(
+            spark,
+            index_path,
+            sigs.join(docs.select("doc_id"), "doc_id", "left_semi"),
+        )
+        fresh = docs.join(F.broadcast(exact), "doc_id", "left_anti")
+        fresh = fresh.localCheckpoint(eager=True)
+        _mark("exact_probe")
+        fresh_sigs = sigs.join(
+            fresh.select("doc_id"), "doc_id", "left_semi"
+        ).localCheckpoint(eager=False)
+        dups = (
+            minhash_probe_index(spark, index_path, fresh, sigs=fresh_sigs)
+            .where(F.col("est_jaccard") >= est_threshold)
+            .select(F.col("new_doc_id").alias("doc_id"))
+            .distinct()
+        )
+        novel = fresh.join(F.broadcast(dups), "doc_id", "left_anti")
+        novel = novel.localCheckpoint(eager=True)
+        _mark("near_probe")
+    novel_sigs = sigs.join(novel.select("doc_id"), "doc_id", "left_semi")
+    wexact = exact_within_drops(novel_sigs, hash_col="sig_hash")
+    novel = novel.join(F.broadcast(wexact), "doc_id", "left_anti")
+    # the wexact broadcast builds strictly before the pairing build's
+    # detection count, which then holds this lazy frame exactly once
+    novel_sigs = novel_sigs.join(
+        F.broadcast(wexact), "doc_id", "left_anti"
+    ).localCheckpoint(eager=False)
+    within = (
+        minhash_lsh_pairs(novel, sigs=novel_sigs)
+        .where(F.col("est_jaccard") >= est_threshold)
+        .select(F.greatest("doc_a", "doc_b").alias("doc_id"))
+        .distinct()
+    )
+    kept = novel.join(F.broadcast(within), "doc_id", "left_anti")
+    kept = kept.localCheckpoint(eager=True)
+    _mark("within")
+    return kept
+
+
 def minhash_index_compact(
     spark, path: str, tag: str = "base", exclude_tags: set[str] | None = None
 ) -> dict[str, tuple[int, int]]:
@@ -1431,8 +1554,6 @@ def minhash_index_compact(
     Probe results are unchanged either way (pytest-asserted); returns
     {store: (files_before, files_after)}.
     """
-    import os
-
     from ct_mapreduce_spark.fsutil import (
         TMP_SUFFIX,
         count_parquet_files,
@@ -1453,7 +1574,7 @@ def minhash_index_compact(
     out: dict[str, tuple[int, int]] = {}
     for store in ("banded", "sigs", "hashes"):
         base_p, inc_p = f"{path}/{store}", f"{path}/{store}_inc"
-        if not (os.path.exists(base_p) or os.path.exists(inc_p)):
+        if not (path_exists(spark, base_p) or path_exists(spark, inc_p)):
             continue
         recover_swap(spark, base_p)
         parts = []

@@ -46,6 +46,7 @@ extends the LLM-pipeline suite alongside selection.py / text.py.
 from __future__ import annotations
 
 import math
+from typing import Callable
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -525,3 +526,59 @@ def lm_filter(
         scores.where(F.col("xent_micro") <= int(max_xent_micro)),
         id_col,
     )
+
+
+def lm_gate_model(
+    spark,
+    model_path: str | None,
+    order: int = 1,
+    reference: Callable[[], DataFrame] | None = None,
+) -> tuple[DataFrame, DataFrame | None]:
+    """The perplexity gate's model as (unigram table, bigram table or
+    None); score with lm_score_backoff when the bigram table is present,
+    lm_score otherwise.
+
+    Persisted layout: the unigram table at `model_path`; at order 2 the
+    bigram table at the SIBLING path `{model_path}_bi` (a subdirectory
+    would corrupt the unigram parquet read). A persisted model is loaded
+    (existence checked through the Hadoop FileSystem API, so remote
+    paths load too). Asking order 2 of a model persisted at order 1 is a
+    hard error, never a silent unigram fallback.
+
+    With no persisted model, `reference()` supplies the training corpus
+    (min_count=2, lm_train_joint at order 2 — one scan for both tables)
+    and the model is saved to `model_path` when one is given, so later
+    runs score under the SAME model. Without `reference` a missing model
+    is an error: serve-only callers (the dedup daemon) never train."""
+    from ct_mapreduce_spark.fsutil import path_exists
+
+    bi_path = None if model_path is None else model_path + "_bi"
+    if model_path is not None and path_exists(spark, model_path + "/_SUCCESS"):
+        model = spark.read.parquet(model_path)
+        if order != 2:
+            return model, None
+        if not path_exists(spark, bi_path + "/_SUCCESS"):
+            raise ValueError(
+                f"lm_order=2 but {bi_path} has no bigram table: "
+                "the persisted model was trained at order 1. "
+                "Delete the lm_model artifact to retrain both, "
+                "or run with lm_order=1."
+            )
+        return model, spark.read.parquet(bi_path)
+    if reference is None:
+        raise ValueError(
+            f"no persisted language model at {model_path}: train one "
+            "(operators/lm.py) and save it there first"
+        )
+    ref = reference()
+    if order == 2:
+        model, bi = lm_train_joint(ref, min_count=2)
+    else:
+        model, bi = lm_train_unigram(ref, min_count=2), None
+    if model_path is not None:
+        model.coalesce(1).write.mode("overwrite").parquet(model_path)
+        model = spark.read.parquet(model_path)
+        if bi is not None:
+            bi.coalesce(1).write.mode("overwrite").parquet(bi_path)
+            bi = spark.read.parquet(bi_path)
+    return model, bi

@@ -1564,18 +1564,14 @@ def heal_reingested_tag(spark, path: str, store: str, tag: str) -> int:
         if fs.exists(p):
             fs.delete(p, True)
         return n_tag
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        (
-            novel.withColumn("ingest_batch", F.lit(str(tag)))
-            .coalesce(4)
-            .write.mode("overwrite")
-            .partitionBy("ingest_batch")
-            .parquet(inc_p)
-        )
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+    (
+        novel.withColumn("ingest_batch", F.lit(str(tag)))
+        .coalesce(4)
+        .write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy("ingest_batch")
+        .parquet(inc_p)
+    )
     return n_tag - n_novel
 
 

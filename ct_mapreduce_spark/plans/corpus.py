@@ -2278,9 +2278,9 @@ def docs_exact_within_reps(spark, sf_dir):
     keeping one min-id representative per content_hash. Input doubles
     the documents table under shifted ids so every text has at least
     one verbatim copy; md5 is identical in Spark and DuckDB, so the
-    full oracle hash-compares the exact drop list the serve
-    compositions (plans/curate.py, streaming/dedup_stream.py) rely on
-    to keep copy-heavy batches off the quadratic banded path."""
+    full oracle hash-compares the exact drop list the incremental-dedup
+    core (dedup_fuzzy.incremental_dedup_keep) relies on to keep
+    copy-heavy batches off the quadratic banded path."""
     d = _t(spark, sf_dir, "documents").select("doc_id", "text")
     u = d.unionByName(
         d.select((F.col("doc_id") + 100000).alias("doc_id"), "text")

@@ -14,7 +14,11 @@ examples/crawl_pipeline.py:
 The dedup index persists under {workdir}/mh_index across invocations —
 run the command per crawl drop and each batch dedups against everything
 previously accepted (the O(batch) incremental architecture, never a
-corpus re-pair).
+corpus re-pair). The dedup tiers are operators/dedup_fuzzy.py:
+incremental_dedup_keep, the same core the streaming daemon
+(streaming/dedup_stream.py) runs per micro-batch; this plan adds the
+id-containment pre-filter and folds survivors with
+minhash_index_build/append.
 
 Cost model (the r7 rework): every stage boundary is localCheckpoint'ed
 once, so the expensive upstream work — the WARC parse + HTML extraction,
@@ -48,15 +52,15 @@ from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
 
-def _artifact_exists(spark: SparkSession, path: str, marker: str = "_SUCCESS") -> bool:
+def _artifact_exists(spark: SparkSession, path: str) -> bool:
     """Completed-artifact check through the Hadoop FileSystem API, so the
-    train-once lifecycle (lm_model / bpe_model / dsir_model / mh_index /
-    eval_grams) holds on s3a/hdfs workdirs too — os.path.exists is
-    local-only and would silently retrain (and overwrite) the model on
-    every drop of a remote deployment."""
+    train-once lifecycle (bpe_model / dsir_model / eval_grams) holds on
+    s3a/hdfs workdirs too — os.path.exists is local-only and would
+    silently retrain (and overwrite) the model on every drop of a remote
+    deployment."""
     from ct_mapreduce_spark.fsutil import path_exists
 
-    return path_exists(spark, os.path.join(path, marker) if marker else path)
+    return path_exists(spark, os.path.join(path, "_SUCCESS"))
 
 
 def _next_drop_tag(spark: SparkSession, export_root: str) -> str:
@@ -283,51 +287,27 @@ def curate_crawl(
         # Optional stage 2b: perplexity gate. One broadcast-join scoring
         # pass over the checkpointed survivors; the model is
         # vocabulary-sized (min_count=2 folds the hapax tail into OOV).
-        # lm_order=2 upgrades to the stupid-backoff bigram scorer: the
-        # bigram table is a SECOND artifact persisted at {lm_model}_bi
-        # (a sibling path — a subdirectory would corrupt the unigram
-        # parquet read), trained/loaded under the same
-        # once-per-corpus-history lifecycle.
+        # lm_order=2 upgrades to the stupid-backoff bigram scorer; both
+        # tables persist under the once-per-corpus-history lifecycle
+        # (operators/lm.py:lm_gate_model).
         from ct_mapreduce_spark.operators.lm import (
+            lm_gate_model,
             lm_score,
             lm_score_backoff,
-            lm_train_joint,
-            lm_train_unigram,
         )
 
-        bi_path = None if lm_model is None else lm_model + "_bi"
-        if lm_model is not None and _artifact_exists(spark, lm_model):
-            model = spark.read.parquet(lm_model)
-            bi = None
-            if lm_order == 2:
-                if not _artifact_exists(spark, bi_path):
-                    raise ValueError(
-                        f"lm_order=2 but {bi_path} has no bigram table: "
-                        "the persisted model was trained at order 1. "
-                        "Delete the lm_model artifact to retrain both, "
-                        "or run with lm_order=1."
-                    )
-                bi = spark.read.parquet(bi_path)
-        else:
-            ref = (
+        model, bi = lm_gate_model(
+            spark,
+            lm_model,
+            lm_order,
+            reference=lambda: (
                 text_source.read_jsonl(spark, lm_reference).where(
                     F.col("text").isNotNull()
                 )
                 if lm_reference is not None
                 else good
-            )
-            if lm_order == 2:
-                # one-scan joint trainer (r10): bit-identical to the
-                # separate calls, one fewer pass over the reference
-                model, bi = lm_train_joint(ref, min_count=2)
-            else:
-                model, bi = lm_train_unigram(ref, min_count=2), None
-            if lm_model is not None:
-                model.coalesce(1).write.mode("overwrite").parquet(lm_model)
-                model = spark.read.parquet(lm_model)
-                if bi is not None:
-                    bi.coalesce(1).write.mode("overwrite").parquet(bi_path)
-                    bi = spark.read.parquet(bi_path)
+            ),
+        )
         scores = (
             lm_score_backoff(good, model, bi)
             if bi is not None
@@ -417,8 +397,8 @@ def curate_crawl(
         walls[f"dedup_{name}"] = round(now - _dsub[0], 3)
         _dsub[0] = now
 
-    # The quality survivors are SIGNED ONCE; the probe tier, the
-    # within-batch tier, and the index fold all take subset views of
+    # The quality survivors are SIGNED ONCE; the probe tiers, the
+    # within-batch tiers, and the index fold all take subset views of
     # this one materialized frame (semi-joins on checkpointed inputs)
     # instead of re-running the Python signature pass per tier.
     sigs = dedup_fuzzy.minhash_signatures(fan_out(good)).localCheckpoint(
@@ -427,70 +407,20 @@ def curate_crawl(
     _dmark("sign")
 
     idx = os.path.join(workdir, "mh_index")
-    idx_exists = _artifact_exists(spark, os.path.join(idx, "sigs"), marker="")
-    if idx_exists:  # later drops dedup against everything accepted before
-        # two tiers: (1) id-level containment — a re-crawl of a page we
-        # already ingested carries the SAME doc_id, which the minhash
-        # probe correctly treats as "self" and skips; (2) near-dup
-        # probe for new ids with known-similar content.
+    idx_exists = dedup_fuzzy.minhash_index_exists(spark, idx)
+    fresh = good
+    if idx_exists:
+        # id-level containment: a re-crawl of a page we already ingested
+        # carries the SAME doc_id, which the near-dup probe treats as
+        # "self" and skips — drop it before the content tiers
         existing = spark.read.parquet(os.path.join(idx, "sigs")).select(
             "doc_id"
         )
         fresh = good.join(existing, "doc_id", "left_anti")
-        # exact tier (hash store): verbatim re-crawled content drops by
-        # hash equality in O(batch) — equal content has est_jaccard 1.0,
-        # so the keep-set is unchanged while the banded tier's quadratic
-        # template-bucket candidate work disappears (10x re-crawl soak:
-        # 113 s -> the banded probe sees ~zero docs)
-        fresh_sigs = sigs.join(fresh.select("doc_id"), "doc_id", "left_semi")
-        exact = dedup_fuzzy.exact_hash_probe(spark, idx, fresh_sigs)
-        fresh = fresh.join(F.broadcast(exact), "doc_id", "left_anti")
-        fresh = fresh.localCheckpoint(eager=True)
-        _dmark("exact_probe")
-        # lazy (r15): the probe's first action (the bounded pfx-list
-        # collect) holds this frame once and materializes it; the
-        # banded join side and the est-join side then read blocks
-        # instead of re-running the semi-join per consumer
-        fresh_sigs = sigs.join(
-            fresh.select("doc_id"), "doc_id", "left_semi"
-        ).localCheckpoint(eager=False)
-        dups = (
-            dedup_fuzzy.minhash_probe_index(spark, idx, fresh, sigs=fresh_sigs)
-            .where(F.col("est_jaccard") >= est_threshold)
-            .select(F.col("new_doc_id").alias("doc_id"))
-            .distinct()
-        )
-        # materialized so the within tier's consumers don't re-run the
-        # probe's index scan per consumer
-        novel = fresh.join(F.broadcast(dups), "doc_id", "left_anti")
-        novel = novel.localCheckpoint(eager=True)
-        _dmark("near_probe")
-    else:  # first drop: within-batch dedup only
-        novel = good
-    novel_sigs = sigs.join(novel.select("doc_id"), "doc_id", "left_semi")
-    # within-batch exact tier: one representative per content before the
-    # banded tier pairs anything (copy-heavy crawls would otherwise pair
-    # their copies quadratically inside identical LSH buckets)
-    wexact = dedup_fuzzy.exact_within_drops(novel_sigs, hash_col="sig_hash")
-    novel = novel.join(F.broadcast(wexact), "doc_id", "left_anti")
-    # lazy (r15): the pairing build's saturation-detection count is the
-    # first action and holds this frame once (the wexact broadcast under
-    # it builds strictly first) — it materializes the blocks; the two
-    # est-join sides then read blocks instead of re-running the
-    # semi/anti joins per consumer
-    novel_sigs = novel_sigs.join(
-        F.broadcast(wexact), "doc_id", "left_anti"
-    ).localCheckpoint(eager=False)
-    within = (
-        dedup_fuzzy.minhash_lsh_pairs(novel, sigs=novel_sigs)
-        .where(F.col("est_jaccard") >= est_threshold)
-        .select(F.greatest("doc_a", "doc_b").alias("doc_id"))
-        .distinct()
-    )
     # Stage boundary 3: the accepted set (index fold + lang-id + count).
-    kept = novel.join(F.broadcast(within), "doc_id", "left_anti")
-    kept = kept.localCheckpoint(eager=True)
-    _dmark("within")
+    kept = dedup_fuzzy.incremental_dedup_keep(
+        spark, idx, fresh, est_threshold, sigs=sigs, mark=_dmark
+    )
     kept_sigs = sigs.join(kept.select("doc_id"), "doc_id", "left_semi")
     if idx_exists:
         dedup_fuzzy.minhash_index_append(kept, idx, sigs=kept_sigs)

@@ -111,7 +111,6 @@ def write_cells(
     cent_rows=None the assignment budget-dispatches (_assign_batch):
     a store past _DRIVER_MODEL_CELL_BUDGET assigns through the
     two-level tier instead of collecting the model."""
-    spark = vectors.sparkSession
     assigned = (
         _assign_batch(vectors, index_path, cent_rows, id_col, vec_col, "neighbor")
         .withColumnRenamed("neighbor_id", id_col)
@@ -120,14 +119,9 @@ def write_cells(
         .select(id_col, vec_col, "vnorm", "cell")
         .withColumn("ingest_batch", F.lit(batch_tag))
     )
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        assigned.coalesce(4).write.mode("overwrite").partitionBy(
-            "ingest_batch"
-        ).parquet(index_path + "/_inc")
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+    assigned.coalesce(4).write.mode("overwrite").option(
+        "partitionOverwriteMode", "dynamic"
+    ).partitionBy("ingest_batch").parquet(index_path + "/_inc")
 
 
 def write_codes(
@@ -212,14 +206,9 @@ def write_codes(
         enc.select(id_col, "codes", "cell")
         .withColumn("ingest_batch", F.lit(batch_tag))
     )
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        out.coalesce(4).write.mode("overwrite").partitionBy(
-            "ingest_batch"
-        ).parquet(index_path + "/codes/_inc")
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+    out.coalesce(4).write.mode("overwrite").option(
+        "partitionOverwriteMode", "dynamic"
+    ).partitionBy("ingest_batch").parquet(index_path + "/codes/_inc")
 
 
 def start_ann_ingest_stream(
@@ -350,12 +339,10 @@ def start_ann_ingest_stream(
         return session.read.parquet(index_path + "/_centroids").collect()
 
     def _process(batch_df: DataFrame, batch_id: int) -> None:
-        # foreachBatch hands the batch a CLONED SparkSession; conf must
-        # be set on THAT session or the dynamic overwrite silently runs
-        # STATIC and truncates every other batch's increment partition —
-        # write_cells/write_codes key off their input frame's session
-        # for exactly this reason (the dedup daemon found this trap
-        # first).
+        # foreachBatch hands the batch a CLONED SparkSession: model reads
+        # key off THAT session; write_cells/write_codes set dynamic
+        # overwrite on the writer, so no session conf can turn it STATIC
+        # and truncate every other batch's increment partition.
         session = batch_df.sparkSession
         if pq:
             if not model_cache:

@@ -2,20 +2,23 @@
 
 A continuously-arriving document stream is deduplicated against
 everything ever accepted before it, using the materialized MinHash index
-(operators/dedup_fuzzy.py): per micro-batch, probe the index, drop
-near-dups (cross-batch AND within-batch), append the survivors' posting
-lists, and emit the survivors as the keep-list. This is the streaming
-face of the same build-once/probe-pruned architecture the batch path
-uses — a 100 TB corpus is not re-signed per batch; each trigger pays
-O(batch).
+(operators/dedup_fuzzy.py): per micro-batch, run the incremental-dedup
+core (dedup_fuzzy.incremental_dedup_keep — the same tiers plans/curate.py
+runs per crawl drop: probe the index, drop near-dups cross-batch AND
+within-batch), append the survivors' posting lists, and emit the
+survivors as the keep-list. This is the streaming face of the same
+build-once/probe-pruned architecture the batch path uses — a 100 TB
+corpus is not re-signed per batch; each trigger pays O(batch).
 
 Replay safety (foreachBatch re-delivers a batch after a crash): every
 write is keyed by the batch id and performed with DYNAMIC partition
-overwrite, so a replayed batch overwrites exactly its own partitions —
-postings, signatures, and keep-list are idempotent without a
-transactional store. (Plain parquet `append` would double-insert
-postings on replay, inflating n_bands_matched; that is why this module
-maintains its own ingest_batch=... partition level rather than calling
+overwrite (set per write, never on a session conf, so foreachBatch's
+cloned session cannot silently run it STATIC), so a replayed batch
+overwrites exactly its own partitions — postings, signatures, and
+keep-list are idempotent without a transactional store. (Plain parquet
+`append` would double-insert postings on replay, inflating
+n_bands_matched; that is why this module maintains its own
+ingest_batch=... partition level rather than calling
 minhash_index_append.)
 
 Reference anchor: the daemon shape mirrors SURVEY §2.8's T1-T3 ingest
@@ -33,10 +36,7 @@ from pyspark.sql.streaming import StreamingQuery
 from ct_mapreduce_spark.operators.dedup_fuzzy import (
     _banded_frame,
     _batch_hash_frame,
-    exact_hash_probe,
-    exact_within_drops,
-    minhash_lsh_pairs,
-    minhash_probe_index,
+    incremental_dedup_keep,
     minhash_signatures,
 )
 from ct_mapreduce_spark.operators.util import fan_out
@@ -76,128 +76,37 @@ def write_postings(
     materialized signatures covering exactly `docs` (the stream
     processor signs each micro-batch once and shares the frame across
     probe/within/fold)."""
-    spark = docs.sparkSession
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        if sigs is None:
-            sigs = minhash_signatures(
-                fan_out(docs), text_col, k, num_hashes, seed
-            ).localCheckpoint(eager=True)
-        banded = _banded_frame(sigs, num_hashes, bands).select(
-            "doc_id",
-            "band",
-            "bucket",
-            F.substring("bucket", 1, 2).alias("pfx"),
-            F.lit(batch_tag).alias("ingest_batch"),
-        )
-        banded.coalesce(8).write.mode("overwrite").partitionBy(
-            "ingest_batch"
-        ).parquet(path + "/banded_inc")
-        sigs.coalesce(4).withColumn(
-            "ingest_batch", F.lit(batch_tag)
-        ).write.mode("overwrite").partitionBy("ingest_batch").parquet(
-            path + "/sigs"
-        )
-        hashes = (
-            _batch_hash_frame(sigs)
-            .select("kind", "hash", "hpfx")
-            .distinct()
-            .withColumn("ingest_batch", F.lit(batch_tag))
-        )
-        hashes.coalesce(2).write.mode("overwrite").partitionBy(
-            "ingest_batch"
-        ).parquet(path + "/hashes_inc")
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
-
-
-def dedup_batch(
-    spark: SparkSession,
-    index_path: str,
-    batch: DataFrame,
-    est_threshold: float = 0.9,
-    sigs: DataFrame | None = None,
-) -> DataFrame:
-    """One batch's keep-list: drop exact content copies by hash equality
-    against the index's hash store (exact tier, O(batch)), then drop
-    documents whose banded probe finds a candidate with est_jaccard >=
-    threshold (cross-batch fuzzy tier), then drop within-batch near-dups
-    keeping the min doc_id (the engine-wide first-seen-wins rule).
-    Returns the surviving rows of `batch` unchanged. The exact tier is a
-    strict subset of the fuzzy tier's matches for any threshold <= 1
-    (equal content has est_jaccard 1.0), so the keep-list is unchanged —
-    only the candidate work moves off the quadratic path.
-
-    An index that does not exist yet (first-ever batch, nothing seeded)
-    means zero cross-batch candidates — the probe tier is skipped,
-    mirroring plans/curate.py's idx_exists branch, instead of failing on
-    a parquet read of a missing path in the first micro-batch.
-
-    The batch is SIGNED ONCE: pass `sigs` (materialized, covering
-    exactly `batch`, which must itself be materialized) to share one
-    signature frame across the probe tier, the within-batch tier, and
-    the caller's index fold — one Python signature pass per micro-batch
-    instead of three. Without `sigs`, the batch is checkpointed and
-    signed here."""
-    import os
-
     if sigs is None:
-        batch = batch.localCheckpoint(eager=True)
-        sigs = minhash_signatures(fan_out(batch)).localCheckpoint(eager=True)
-    if os.path.exists(os.path.join(index_path, "banded")) or os.path.exists(
-        os.path.join(index_path, "banded_inc")
-    ):
-        # exact tier first: verbatim copies (re-crawls are mostly these)
-        # drop by hash equality in O(batch) and never reach the banded
-        # candidate generator — which is quadratic on template-heavy
-        # buckets (10x re-crawl soak: 113 s of candidate scoring whose
-        # answers were all decided by hash equality)
-        exact = exact_hash_probe(spark, index_path, sigs)
-        fuzzy_in = batch.join(
-            F.broadcast(exact), "doc_id", "left_anti"
+        sigs = minhash_signatures(
+            fan_out(docs), text_col, k, num_hashes, seed
         ).localCheckpoint(eager=True)
-        fuzzy_sigs = sigs.join(
-            fuzzy_in.select("doc_id"), "doc_id", "left_semi"
-        )
-        cross_dups = (
-            minhash_probe_index(spark, index_path, fuzzy_in, sigs=fuzzy_sigs)
-            .where(F.col("est_jaccard") >= est_threshold)
-            .select(F.col("new_doc_id").alias("doc_id"))
-            .distinct()
-        )
-        # materialized: three consumers below (the within-tier banded
-        # frame, its est_jaccard joins, the returned keep-list) must not
-        # re-run the probe's index scan per consumer
-        survivors = fuzzy_in.join(
-            F.broadcast(cross_dups), "doc_id", "left_anti"
-        ).localCheckpoint(eager=True)
-        surv_sigs = sigs.join(
-            survivors.select("doc_id"), "doc_id", "left_semi"
-        )
-    else:
-        survivors = batch
-        surv_sigs = sigs
-    # within-batch exact tier: copy-heavy batches drop to one
-    # representative per SIGNATURE before the banded tier pairs anything
-    # (sig_hash ⊇ content equality: verbatim copies and
-    # signature-identical variants both collapse here)
-    wexact = exact_within_drops(surv_sigs, hash_col="sig_hash")
-    survivors = survivors.join(F.broadcast(wexact), "doc_id", "left_anti")
-    # lazy (r15, the curate posture): the pairing build's detection
-    # count is the first action and holds this frame once — the two
-    # est-join sides then read blocks instead of re-running the
-    # semi/anti joins per consumer
-    surv_sigs = surv_sigs.join(
-        F.broadcast(wexact), "doc_id", "left_anti"
-    ).localCheckpoint(eager=False)
-    within = (
-        minhash_lsh_pairs(survivors, sigs=surv_sigs)
-        .where(F.col("est_jaccard") >= est_threshold)
-        .select(F.greatest("doc_a", "doc_b").alias("doc_id"))
-        .distinct()
+    banded = _banded_frame(sigs, num_hashes, bands).select(
+        "doc_id",
+        "band",
+        "bucket",
+        F.substring("bucket", 1, 2).alias("pfx"),
+        F.lit(batch_tag).alias("ingest_batch"),
     )
-    return survivors.join(F.broadcast(within), "doc_id", "left_anti")
+    _overwrite_batch(banded.coalesce(8), path + "/banded_inc")
+    _overwrite_batch(
+        sigs.coalesce(4).withColumn("ingest_batch", F.lit(batch_tag)),
+        path + "/sigs",
+    )
+    hashes = (
+        _batch_hash_frame(sigs)
+        .select("kind", "hash", "hpfx")
+        .distinct()
+        .withColumn("ingest_batch", F.lit(batch_tag))
+    )
+    _overwrite_batch(hashes.coalesce(2), path + "/hashes_inc")
+
+
+def _overwrite_batch(df: DataFrame, path: str) -> None:
+    """Replace exactly the ingest_batch partitions `df` carries under
+    `path` (dynamic partition overwrite, set on the writer)."""
+    df.write.mode("overwrite").option(
+        "partitionOverwriteMode", "dynamic"
+    ).partitionBy("ingest_batch").parquet(path)
 
 
 def start_dedup_stream(
@@ -226,16 +135,18 @@ def start_dedup_stream(
     model and the vocabulary-sized table re-reads cheaply per trigger).
     `lm_order=2` scores under stupid backoff instead, reading the
     bigram table from the `{lm_model_path}_bi` sibling artifact (the
-    curate_crawl layout — train both with lm_order=2 there, or persist
-    lm_train_bigram yourself); a missing bigram sibling is a hard error
-    at scoring time, never a silent unigram fallback. Gated-out
-    documents never pay the signature pass or index work.
+    curate_crawl layout, loaded by operators/lm.py:lm_gate_model — train
+    both with lm_order=2 there, or persist lm_train_bigram yourself); a
+    missing model or bigram sibling is a hard error at scoring time,
+    never a silent unigram fallback. Gated-out documents never pay the
+    signature pass or index work.
 
-    Each trigger: probe + within-batch dedup (dedup_batch), write the
-    keep-list partitioned by ingest_batch, fold the survivors' postings
-    into the index so the NEXT batch dedups against them too. All three
-    writes are batch-id-keyed dynamic overwrites => replay-idempotent;
-    combined with checkpointLocation this is effectively-once.
+    Each trigger: probe + within-batch dedup (incremental_dedup_keep),
+    write the keep-list partitioned by ingest_batch, fold the survivors'
+    postings into the index so the NEXT batch dedups against them too.
+    All three writes are batch-id-keyed dynamic overwrites =>
+    replay-idempotent; combined with checkpointLocation this is
+    effectively-once.
 
     Cold start is supported: with no index at index_path the first
     micro-batch runs within-batch dedup only and its survivors seed the
@@ -284,11 +195,8 @@ def start_dedup_stream(
         )
 
     def _process(batch_df: DataFrame, batch_id: int) -> None:
-        # foreachBatch hands the batch a CLONED SparkSession; conf must be
-        # set on THAT session (batch_df.sparkSession) or the keep write
-        # silently runs as a STATIC overwrite and truncates every other
-        # batch's partition. (write_postings already keys off its input's
-        # session for the same reason.)
+        # foreachBatch hands the batch a CLONED SparkSession: every read
+        # and the compaction key off THAT session (batch_df.sparkSession)
         session = batch_df.sparkSession
         gated = batch_df
         if quality_min is not None:
@@ -300,18 +208,15 @@ def start_dedup_stream(
         batch_c = gated.localCheckpoint(eager=True)
         if lm_model_path is not None and lm_max_xent is not None:
             from ct_mapreduce_spark.operators.lm import (
+                lm_gate_model,
                 lm_score,
                 lm_score_backoff,
             )
 
-            model = session.read.parquet(lm_model_path)
+            model, bi = lm_gate_model(session, lm_model_path, lm_order)
             scores = (
-                lm_score_backoff(
-                    batch_c,
-                    model,
-                    session.read.parquet(lm_model_path + "_bi"),
-                )
-                if lm_order == 2
+                lm_score_backoff(batch_c, model, bi)
+                if bi is not None
                 else lm_score(batch_c, model)
             )
             passing = scores.where(
@@ -323,20 +228,13 @@ def start_dedup_stream(
         sigs = minhash_signatures(fan_out(batch_c)).localCheckpoint(
             eager=True
         )
-        kept = dedup_batch(
+        kept = incremental_dedup_keep(
             session, index_path, batch_c, est_threshold, sigs=sigs
-        ).localCheckpoint(eager=True)
-        kept_sigs = sigs.join(kept.select("doc_id"), "doc_id", "left_semi")
-        prev = session.conf.get(
-            "spark.sql.sources.partitionOverwriteMode", "static"
         )
-        session.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        try:
-            kept.withColumn("ingest_batch", F.lit(str(batch_id))).write.mode(
-                "overwrite"
-            ).partitionBy("ingest_batch").parquet(keep_path)
-        finally:
-            session.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+        kept_sigs = sigs.join(kept.select("doc_id"), "doc_id", "left_semi")
+        _overwrite_batch(
+            kept.withColumn("ingest_batch", F.lit(str(batch_id))), keep_path
+        )
         write_postings(kept, index_path, batch_tag=str(batch_id), sigs=kept_sigs)
         if (
             compact_every is not None

@@ -81,9 +81,9 @@ def start_rate_monitor(
     the batch operator's answer on the same data."""
 
     def _process(batch_df: DataFrame, batch_id: int) -> None:
-        # foreachBatch hands a CLONED SparkSession; conf must be set on
-        # THAT session or the delta write silently runs STATIC and
-        # truncates every other batch's partition (the r6 lesson).
+        # foreachBatch hands a CLONED SparkSession: reads key off THAT
+        # session; the delta write sets dynamic overwrite on the writer
+        # itself, so no session conf can turn it STATIC (the r6 lesson).
         session = batch_df.sparkSession
         delta = (
             batch_df.groupBy(
@@ -93,16 +93,9 @@ def start_rate_monitor(
             .agg(F.count(F.lit(1)).cast("long").alias("n"))
             .withColumn("ingest_batch", F.lit(str(batch_id)))
         )
-        prev = session.conf.get(
-            "spark.sql.sources.partitionOverwriteMode", "static"
-        )
-        session.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        try:
-            delta.coalesce(1).write.mode("overwrite").partitionBy(
-                "ingest_batch"
-            ).parquet(history_path)
-        finally:
-            session.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+        delta.coalesce(1).write.mode("overwrite").option(
+            "partitionOverwriteMode", "dynamic"
+        ).partitionBy("ingest_batch").parquet(history_path)
         scored = zscore_counts(
             history_totals(session, history_path),
             trailing=trailing,

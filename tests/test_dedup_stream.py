@@ -11,8 +11,8 @@ import shutil
 import pytest
 from pyspark.sql import functions as F
 
+from ct_mapreduce_spark.operators.dedup_fuzzy import incremental_dedup_keep
 from ct_mapreduce_spark.streaming.dedup_stream import (
-    dedup_batch,
     start_dedup_stream,
     write_postings,
 )
@@ -159,7 +159,9 @@ def test_dedup_batch_copy_heavy_within_batch(spark, tmp_path):
         + [(500, "a genuinely unique incoming document body " * 4)],
         "doc_id long, text string",
     )
-    kept = {r["doc_id"] for r in dedup_batch(spark, idx, batch).collect()}
+    kept = {
+        r["doc_id"] for r in incremental_dedup_keep(spark, idx, batch).collect()
+    }
     assert kept == {200, 500}, kept
 
 
@@ -180,9 +182,7 @@ def test_all_duplicate_batch_then_next_batch(spark, tmp_path):
     def cycle(batch, tag):
         batch = batch.localCheckpoint(eager=True)
         sigs = minhash_signatures(fan_out(batch)).localCheckpoint(eager=True)
-        kept = dedup_batch(spark, idx, batch, sigs=sigs).localCheckpoint(
-            eager=True
-        )
+        kept = incremental_dedup_keep(spark, idx, batch, sigs=sigs)
         ksigs = sigs.join(kept.select("doc_id"), "doc_id", "left_semi")
         write_postings(kept, idx, batch_tag=tag, sigs=ksigs)
         return {r["doc_id"] for r in kept.collect()}
@@ -216,8 +216,41 @@ def test_dedup_batch_exact_copy_dropped(spark, tmp_path):
         [(100, rows[3][1]), (101, "completely fresh material never seen " * 4)],
         "doc_id long, text string",
     )
-    kept = dedup_batch(spark, idx, batch).select("doc_id").collect()
+    kept = incremental_dedup_keep(spark, idx, batch).collect()
     assert {r["doc_id"] for r in kept} == {101}
+
+
+def test_file_uri_index_path(spark, tmp_path):
+    """An index addressed by URI (file://, like hdfs:// or s3a://) is
+    probed and compacted exactly like the same index given as a plain
+    path — an existence check that only understands local paths would
+    see no index and silently turn every dedup tier off."""
+    from ct_mapreduce_spark.operators.dedup_fuzzy import (
+        exact_hash_probe,
+        minhash_index_compact,
+        minhash_signatures,
+    )
+
+    rows = [(i, f"unique text number {i} " * 5) for i in range(20)]
+    corpus = spark.createDataFrame(rows, "doc_id long, text string")
+    idx = str(tmp_path / "idx_uri")
+    write_postings(corpus, idx, batch_tag="base")
+    batch = spark.createDataFrame(
+        [(100 + j, rows[3][1]) for j in range(3)]
+        + [(200, "completely fresh material never seen " * 4)],
+        "doc_id long, text string",
+    )
+    sigs = minhash_signatures(batch)
+    for path in (idx, "file://" + idx):
+        kept = incremental_dedup_keep(spark, path, batch).collect()
+        assert {r["doc_id"] for r in kept} == {200}, path
+        exact = exact_hash_probe(spark, path, sigs).collect()
+        assert {r["doc_id"] for r in exact} == {100, 101, 102}, path
+    out = minhash_index_compact(spark, "file://" + idx)
+    assert set(out) == {"banded", "sigs", "hashes"}
+    assert not os.path.exists(f"{idx}/banded_inc")
+    kept = incremental_dedup_keep(spark, "file://" + idx, batch).collect()
+    assert {r["doc_id"] for r in kept} == {200}
 
 
 def test_stream_quality_and_lm_gates(spark, tmp_path):
@@ -320,6 +353,36 @@ def test_stream_lm_gate_bigram_order(spark, tmp_path):
     assert kept_ids & {i for i, _ in rows}
 
 
+def test_stream_lm_order2_over_order1_model_is_an_error(spark, tmp_path):
+    """lm_order=2 over a model persisted at order 1 (no bigram sibling)
+    fails the trigger with the same message curate_crawl gives, never a
+    bare missing-path read or a silent unigram fallback."""
+    from pyspark.errors import StreamingQueryException
+
+    from ct_mapreduce_spark.operators.lm import lm_train_unigram
+
+    docs = spark.createDataFrame(
+        [(i, f"plain reference words number {i}") for i in range(4)],
+        "doc_id long, text string",
+    )
+    model_path = str(tmp_path / "lm1")
+    lm_train_unigram(docs, min_count=1).coalesce(1).write.parquet(model_path)
+    src = str(tmp_path / "src")
+    _one_file(docs, src, "b0", 1_000_000.0)
+    q = start_dedup_stream(
+        spark,
+        source_path=src,
+        index_path=str(tmp_path / "idx"),
+        keep_path=str(tmp_path / "keep"),
+        checkpoint=str(tmp_path / "ckpt"),
+        lm_model_path=model_path,
+        lm_max_xent=10**9,
+        lm_order=2,
+    )
+    with pytest.raises(StreamingQueryException, match="trained at order 1"):
+        q.awaitTermination(180)
+
+
 def test_compact_exclude_tags_preserves_inflight(spark, tmp_path):
     """minhash_index_compact(exclude_tags=...): committed increment tags
     fold into the pfx-clustered base; the excluded (in-flight) tag's
@@ -344,7 +407,7 @@ def test_compact_exclude_tags_preserves_inflight(spark, tmp_path):
     def probe_kept():
         return sorted(
             r["doc_id"]
-            for r in dedup_batch(spark, idx, probe).select("doc_id").collect()
+            for r in incremental_dedup_keep(spark, idx, probe).collect()
         )
 
     before = probe_kept()

@@ -278,6 +278,62 @@ def test_curate_scans_warc_once(spark, tmp_path, monkeypatch):
     assert acc.value == 32  # every fixture record seen exactly once
 
 
+def test_curate_second_drop_job_count(spark, tmp_path):
+    """Pins the action job count of a second crawl drop, whose
+    dedup runs every tier (id containment, exact and near-dup index
+    probes, the within-batch tiers) on non-empty input: 8 pages
+    re-crawled under their own record ids, 16 re-crawled under new ids,
+    16 new pages. Each checkpoint in the dedup core is eager or lazy by
+    design (an eager one is its own action job, a lazy one rides the
+    next action), so a posture change shows up here as a different
+    count. Jobs that adaptive execution submits from its own threads to
+    materialize shuffle and broadcast stages are not counted: whether
+    one of them runs or is cancelled depends on timing (the total
+    measured 70 or 71 on the same tree), while the action jobs do not."""
+    from ct_mapreduce_spark.plans.curate import curate_crawl
+    from ct_mapreduce_spark.sources import text_source
+
+    wd = str(tmp_path / "wd")
+    crawl = str(tmp_path / "c1")
+    text_source.synthetic_warc_html_fixture(crawl, n=32)
+    curate_crawl(spark, crawl, wd)
+    recs = [
+        {
+            "warc_type": "response",
+            "url": f"https://crawl.example/page/{i}",
+            "date": "2026-01-02T00:00:00Z",
+            "record_id": f"<urn:uuid:{'h' if i < 8 else 'r'}{i:07d}>",
+            "content_type": "application/http; msgtype=response",
+            "body": text_source.synthetic_html_body(i),
+        }
+        for i in [*range(24), *range(32, 48)]
+    ]
+    crawl2 = tmp_path / "c2"
+    crawl2.mkdir()
+    (crawl2 / "seg-000.warc").write_bytes(text_source.encode_warc(recs))
+    sc = spark.sparkContext
+    group = "curate-second-drop"
+    sc.setJobGroup(group, "curate second drop")
+    try:
+        stats = curate_crawl(spark, str(crawl2), wd)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert stats["extracted"] == 40
+    assert stats["after_dedup"] == 16  # only the 16 new pages survive
+    tracker = sc.statusTracker()
+
+    def result_stage(job_id):
+        return tracker.getStageInfo(max(tracker.getJobInfo(job_id).stageIds))
+
+    actions = [
+        j
+        for j in tracker.getJobIdsForGroup(group)
+        if "withThreadLocalCaptured" not in result_stage(j).name
+    ]
+    assert len(actions) == 21
+
+
 def test_curate_strip_boilerplate(spark, tmp_path):
     """The optional span-removal stage: a paragraph shared by every page
     (a site template) disappears from the exported corpus while each

@@ -833,18 +833,19 @@ def main() -> None:
         shutil.rmtree(wd, ignore_errors=True)
 
     # --- streaming daemon posture (r7): 20 sequential micro-batches
-    # through the daemon body (dedup_batch + keep + write_postings)
-    # against a GROWING index. Per-batch wall must stay flat — each
-    # trigger pays O(batch) signature work plus bounded store reads, and
-    # the index growing 20x must not show up in the wall. 10% of each
-    # batch re-sends batch 0's content (exact tier exercised every
-    # trigger); kept counts verify the dedup kept working. ---
-    from ct_mapreduce_spark.operators.dedup_fuzzy import minhash_signatures
-    from ct_mapreduce_spark.operators.util import fan_out
-    from ct_mapreduce_spark.streaming.dedup_stream import (
-        dedup_batch,
-        write_postings,
+    # through the daemon body (incremental_dedup_keep + keep +
+    # write_postings) against a GROWING index. Per-batch wall must stay
+    # flat — each trigger pays O(batch) signature work plus bounded
+    # store reads, and the index growing 20x must not show up in the
+    # wall. 10% of each batch re-sends batch 0's content (exact tier
+    # exercised every trigger); kept counts verify the dedup kept
+    # working. ---
+    from ct_mapreduce_spark.operators.dedup_fuzzy import (
+        incremental_dedup_keep,
+        minhash_signatures,
     )
+    from ct_mapreduce_spark.operators.util import fan_out
+    from ct_mapreduce_spark.streaming.dedup_stream import write_postings
 
     idxd = tempfile.mkdtemp(prefix="ctspark_soak_daemon_")
     batch_walls = []
@@ -863,9 +864,7 @@ def main() -> None:
         t0 = time.perf_counter()
         batch = fresh.localCheckpoint(eager=True)
         bsigs = minhash_signatures(fan_out(batch)).localCheckpoint(eager=True)
-        kept = dedup_batch(spark, idxd, batch, sigs=bsigs).localCheckpoint(
-            eager=True
-        )
+        kept = incremental_dedup_keep(spark, idxd, batch, sigs=bsigs)
         ksigs = bsigs.join(kept.select("doc_id"), "doc_id", "left_semi")
         write_postings(kept, idxd, batch_tag=str(b), sigs=ksigs)
         batch_walls.append(round(time.perf_counter() - t0, 2))
@@ -892,9 +891,7 @@ def main() -> None:
         t0 = time.perf_counter()
         batch = fresh.localCheckpoint(eager=True)
         bsigs = minhash_signatures(fan_out(batch)).localCheckpoint(eager=True)
-        kept = dedup_batch(spark, idxd, batch, sigs=bsigs).localCheckpoint(
-            eager=True
-        )
+        kept = incremental_dedup_keep(spark, idxd, batch, sigs=bsigs)
         ksigs = bsigs.join(kept.select("doc_id"), "doc_id", "left_semi")
         write_postings(kept, idxd, batch_tag=str(b), sigs=ksigs)
         post_walls.append(round(time.perf_counter() - t0, 2))
@@ -938,9 +935,7 @@ def main() -> None:
         t0 = time.perf_counter()
         batch = fresh.localCheckpoint(eager=True)
         bsigs = minhash_signatures(fan_out(batch)).localCheckpoint(eager=True)
-        kept = dedup_batch(spark, idxa, batch, sigs=bsigs).localCheckpoint(
-            eager=True
-        )
+        kept = incremental_dedup_keep(spark, idxa, batch, sigs=bsigs)
         ksigs = bsigs.join(kept.select("doc_id"), "doc_id", "left_semi")
         write_postings(kept, idxa, batch_tag=str(b), sigs=ksigs)
         inc_p = idxa + "/banded_inc"
