@@ -399,7 +399,10 @@ def build_parser() -> argparse.ArgumentParser:
     c.add_argument(
         "--workdir",
         required=True,
-        help="state root: mh_index/ (persists across drops), export/, manifest/",
+        help="state root: mh_index/ (persists across drops), export/, "
+        "manifest/. Each drop adds one small index increment; `cli dedup "
+        "compact --index <workdir>/mh_index` folds the increments into "
+        "the base",
     )
     c.add_argument("--quality-min", type=float, default=0.2)
     c.add_argument("--est-threshold", type=float, default=0.9)

@@ -579,6 +579,13 @@ def minhash_signatures(
     )
 
 
+# Widest cap the array pairing serves. A cell of W members becomes ONE
+# row holding W(W-1)/2 pair structs: ~2.1M at 2048, already tens of MB
+# in a single task row, and quadratic beyond. Wider caps pair through the
+# sort-merge self-join instead (same pairs, spills to disk).
+_ARRAY_PAIRING_MAX_WIDTH = 2048
+
+
 def minhash_lsh_pairs(
     docs: DataFrame,
     text_col: str = "text",
@@ -641,6 +648,10 @@ def minhash_lsh_pairs(
     budgets member-member evidence for borderline chains (docs within
     threshold of each other but not of the anchor) — raise it for
     corpora where that matters more than wall.
+
+    Pairing builds one sorted member array per cell for caps up to
+    _ARRAY_PAIRING_MAX_WIDTH (2048) and a sort-merge self-join above it
+    or without a cap; both emit the same pairs.
 
     Detection stays one map-side-combined count over the materialized
     banded frame — the healthy-corpus fast path pays one small
@@ -799,7 +810,7 @@ def minhash_lsh_pairs(
                 "left_anti",
             )
             capped = cold.unionByName(capped_hot)
-    if capped is not None:
+    if capped is not None and max_bucket_width <= _ARRAY_PAIRING_MAX_WIDTH:
         # Capping bounds every bucket at max_bucket_width (+1 anchor), so
         # per-bucket member ARRAYS are memory-safe by construction and
         # pairing needs ONE exchange: groupBy (band, bucket) -> sorted
@@ -842,11 +853,14 @@ def minhash_lsh_pairs(
             .select("_p.doc_a", "_p.doc_b")
         )
     else:
-        # Uncapped (max_bucket_width=None): bucket width is unbounded, so
-        # per-bucket arrays could OOM a task — keep the sort-merge
-        # self-join, which sorts and spills gracefully.
-        a = banded.alias("a")
-        b = banded.alias("b")
+        # Uncapped (max_bucket_width=None), or capped above
+        # _ARRAY_PAIRING_MAX_WIDTH: one bucket's pair array could OOM a
+        # task — keep the sort-merge self-join, which sorts and spills
+        # gracefully. A capped frame is made distinct first, so a
+        # repeated doc_id counts once per cell as on the array path.
+        cells = banded if capped is None else capped.distinct()
+        a = cells.alias("a")
+        b = cells.alias("b")
         pair_cells = a.join(
             b,
             (F.col("a.band") == F.col("b.band"))
@@ -1119,9 +1133,11 @@ def minhash_index_append(
     the incremental lifecycle: probe, drop near-dups, APPEND survivors so
     the next batch dedups against them too). Parquet append into the same
     pfx partition layout — no rewrite of existing posting files, so the
-    cost is O(batch) regardless of index size. Run compact_store on
-    {path}/banded periodically if many small batches accumulate small
-    files."""
+    cost is O(batch) regardless of index size. Run minhash_index_compact
+    on {path} periodically if many small batches accumulate small files.
+    Each call adds one file per non-empty prefix (~290 for a 40-page
+    batch); write_postings folds a batch as one small increment
+    instead."""
     if sigs is None:
         sigs = minhash_signatures(fan_out(docs), text_col, k, num_hashes, seed)
         sigs = sigs.localCheckpoint(eager=True)
@@ -1158,26 +1174,16 @@ def _batch_hash_frame(batch_sigs: DataFrame) -> DataFrame:
     return rows.withColumn("hpfx", F.substring("hash", 1, 2))
 
 
-def _write_hash_store(
-    sigs: DataFrame,
-    path: str,
-    mode: str,
-    batch_tag: str | None = None,
-) -> None:
+def _write_hash_store(sigs: DataFrame, path: str, mode: str) -> None:
     """The exact-tier hash store: distinct (kind, hash) rows — kind
     'content' (md5 of text: verbatim copies) and 'sig' (md5 of the
     signature vector: signature-identical variants) — partitioned by
-    hpfx (hash prefix) and clustered like the posting lists; streaming
-    callers add an ingest_batch level for replay idempotence."""
+    hpfx (hash prefix) and clustered like the posting lists."""
     hashes = _batch_hash_frame(sigs).select("kind", "hash", "hpfx").distinct()
-    part_cols = ["hpfx"]
-    if batch_tag is not None:
-        hashes = hashes.withColumn("ingest_batch", F.lit(batch_tag))
-        part_cols = ["ingest_batch", "hpfx"]
     w = _cluster_writers(hashes, "hpfx").write.mode(mode)
     if mode == "append":
         w = append_v1(w)  # see util.APPEND_COMMITTER_V1
-    w.partitionBy(*part_cols).parquet(path + "/hashes")
+    w.partitionBy("hpfx").parquet(path + "/hashes")
 
 
 def _try_read_parquet(spark, p: str):
@@ -1203,9 +1209,9 @@ def _try_read_parquet(spark, p: str):
 def _read_store(spark, path: str, store: str, columns: list[str]):
     """Union view of an index store's BASE tree ({path}/{store},
     pfx-partitioned, probe-prunable) and its INCREMENT tree
-    ({path}/{store}_inc, written by the streaming daemon: one small
-    unclustered file set per micro-batch, prefix kept as a DATA column).
-    Increments exist so a trigger writes O(1) files instead of one file
+    ({path}/{store}_inc, written by write_postings: one small
+    unclustered file set per batch, prefix kept as a DATA column).
+    Increments exist so a batch writes O(1) files instead of one file
     per non-empty prefix (~500 for a toy batch — the r7 daemon soak
     measured per-batch walls growing 12 -> 26 s from exactly this);
     minhash_index_compact folds them into the base. Returns None when
@@ -1415,8 +1421,8 @@ def minhash_probe_index(
 
 def minhash_index_exists(spark, path: str) -> bool:
     """Whether `path` holds a MinHash index: its posting-list BASE tree
-    (minhash_index_build, compaction) or its INCREMENT tree (the
-    streaming daemon's write_postings). Checked through the Hadoop
+    (minhash_index_build, compaction) or its INCREMENT tree
+    (write_postings). Checked through the Hadoop
     FileSystem API, so remote and file:// URIs answer like local paths."""
     return path_exists(spark, f"{path}/banded") or path_exists(
         spark, f"{path}/banded_inc"
@@ -1451,9 +1457,8 @@ def incremental_dedup_keep(
     Each tier is a broadcast semi/anti-join of the small batch side
     against a larger frame. Tiers 1-2 run only when `index_path` holds
     an index (minhash_index_exists); a first batch runs 3-4 only. The
-    index is never written here: callers fold the survivors in their own
-    layout (minhash_index_build/append, or the daemon's replay-safe
-    write_postings).
+    index is never written here: callers fold the survivors with
+    write_postings.
 
     `sigs`: the batch's materialized minhash_signatures frame covering
     exactly `docs` (which must itself be materialized), shared with the
@@ -1520,16 +1525,104 @@ def incremental_dedup_keep(
     return kept
 
 
+# Target bytes per increment file: Spark's default
+# spark.sql.files.openCostInBytes, the read cost Spark itself charges for
+# opening one file. Smaller files cost more to open than to read.
+_INC_FILE_BYTES = 4 << 20
+
+
+def write_postings(
+    docs: DataFrame,
+    path: str,
+    batch_tag: str,
+    text_col: str = "text",
+    k: int = 3,
+    num_hashes: int = 64,
+    bands: int = 16,
+    seed: int = 42,
+    sigs: DataFrame | None = None,
+) -> int:
+    """Fold one accepted batch into the index as ONE increment — the
+    index fold of plans/curate.py (one call per crawl drop, tagged with
+    the drop tag) and streaming/dedup_stream.py (one call per
+    micro-batch, tagged with the batch id). Idempotent: each store is
+    written with dynamic partition overwrite, so a replay of the same tag
+    replaces its own partitions and no others.
+
+    Layout (r7 LSM shape): the batch's postings, signatures and hashes go
+    to {path}/banded_inc, {path}/sigs_inc and {path}/hashes_inc, each
+    under ingest_batch=<batch_tag>/, with the prefix kept as a DATA
+    column. A pfx-partitioned write (minhash_index_append) costs one file
+    per non-empty prefix — ~290 for a 40-page drop, since 640 band
+    buckets cover every prefix — and every later probe pays a listing job
+    over those directories. Probes read base ∪ increments (_read_store:
+    the base prunes on pfx, the small increments row-filter);
+    minhash_index_compact folds increments into the pfx-clustered base.
+    Signatures never go into {path}/sigs: a base written by
+    minhash_index_build is flat, and Spark reading a tree that mixes
+    flat files with ingest_batch= directories returns only the
+    partitioned rows, silently hiding the rest.
+
+    Each store gets one file per _INC_FILE_BYTES of estimated row bytes,
+    at least one and at most defaultParallelism (one writer task per
+    core), so a small batch writes three files and a large one keeps
+    every core writing. The three sinks run as concurrent jobs over one
+    materialized keep-signature frame, like minhash_index_build.
+
+    `sigs`: optional precomputed signatures covering exactly `docs`
+    (minhash_signatures output; the callers pass a semi-join of their
+    materialized batch signatures). Returns the number of signature rows
+    folded — the batch's row count."""
+    if sigs is None:
+        sigs = minhash_signatures(fan_out(docs), text_col, k, num_hashes, seed)
+    # lazy: the count is the one job that materializes it, and it sizes
+    # the increment files; the three writes read its blocks
+    sigs = sigs.localCheckpoint(eager=False)
+    n = sigs.count()
+    banded = _banded_frame(sigs, num_hashes, bands).withColumn(
+        "pfx", F.substring("bucket", 1, 2)
+    )
+    hashes = _batch_hash_frame(sigs).select("kind", "hash", "hpfx").distinct()
+    width = sigs.sparkSession.sparkContext.defaultParallelism
+
+    def _write(df: DataFrame, store: str, est_bytes: int) -> None:
+        files = min(width, max(1, -(-est_bytes // _INC_FILE_BYTES)))
+        _overwrite_batch(
+            df.coalesce(files).withColumn("ingest_batch", F.lit(batch_tag)),
+            f"{path}/{store}",
+        )
+
+    # estimated uncompressed row bytes: doc_id + band + sha1 hex + pfx;
+    # doc_id + signature + two md5 hex; kind + md5 hex + hpfx (<= 2/doc)
+    _run_parallel(
+        lambda: _write(banded, "banded_inc", n * bands * 54),
+        lambda: _write(sigs, "sigs_inc", n * (8 * num_hashes + 72)),
+        lambda: _write(hashes, "hashes_inc", n * 2 * 40),
+    )
+    return n
+
+
+def _overwrite_batch(df: DataFrame, path: str) -> None:
+    """Replace exactly the ingest_batch partitions `df` carries under
+    `path` (dynamic partition overwrite, set on the writer: foreachBatch
+    hands its callback a cloned session, which a session conf would not
+    reach)."""
+    df.write.mode("overwrite").option(
+        "partitionOverwriteMode", "dynamic"
+    ).partitionBy("ingest_batch").parquet(path)
+
+
 def minhash_index_compact(
     spark, path: str, tag: str = "base", exclude_tags: set[str] | None = None
 ) -> dict[str, tuple[int, int]]:
     """Index maintenance: rewrite the posting-list store's accumulated
     small files into pfx-clustered right-sized ones — the lifecycle task
     behind a long-lived incremental dedup index (every
-    minhash_index_append / streaming write_postings adds O(pfx) files;
-    after thousands of batches the probe's scan cost is file opens, not
-    bytes). Same crash-safe temp-write + rename-aside swap as the cert
-    store's compact_store (sources/sinks.py / fsutil.py).
+    minhash_index_append adds O(pfx) files and every write_postings a
+    few; after thousands of batches the probe's scan cost is file opens
+    and listing, not bytes). Same crash-safe temp-write + rename-aside
+    swap as the cert store's compact_store (sources/sinks.py /
+    fsutil.py).
 
     Handles both layouts: the batch index ({path}/banded/pfx=XX) is
     rewritten in place; the STREAMING layout — per-batch INCREMENT trees
@@ -1546,10 +1639,11 @@ def minhash_index_compact(
       `exclude_tags={current batch id}` — the auto-compaction hook
       (streaming/dedup_stream.py): rows under an excluded tag stay in
       their original per-tag partitions (increments keep the tag's
-      subtree; the sigs store keeps the tag's partition in the
-      rewritten tree), so a crash-replay's dynamic partition overwrite
-      of that tag replaces exactly its own rows — never a second copy
-      beside a consolidated one.
+      subtree; a sigs base written with ingest_batch partitions by
+      earlier releases keeps the tag's partition in the rewritten
+      tree), so a crash-replay's dynamic partition overwrite of that tag
+      replaces exactly its own rows — never a second copy beside a
+      consolidated one.
 
     Probe results are unchanged either way (pytest-asserted); returns
     {store: (files_before, files_after)}.

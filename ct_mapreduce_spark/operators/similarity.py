@@ -732,9 +732,9 @@ def ivf_topk(
 # models) stay on the literal tier. Pin safety: the tiers may disagree
 # only on a last-ulp cosine tie (numpy pairwise vs sequential fold
 # summation); all pinned similarity queries were re-verified
-# bit-identical against the DuckDB/independent oracle at sf0.001 and
-# sf0.01 (the driver's gate SFs) after the flip — see
-# OPTIMIZATION_r15.md.
+# bit-identical against the DuckDB/independent oracle at sf0.01, the pin
+# SF, after the flip. sf0.001 is not a pin surface: the tree before the
+# flip fails there identically — see OPTIMIZATION_r15.md.
 # UNIT: cells x dims (a matrix-element count) — NOT the same unit as
 # _DRIVER_MODEL_CELL_BUDGET (cells); tuning one must not move the other.
 _ASSIGN_INTERPRETED_BUDGET = 768  # cells * dims

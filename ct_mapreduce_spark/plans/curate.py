@@ -5,7 +5,7 @@ gated in plans/corpus.py), shared by `cli curate` and
 examples/crawl_pipeline.py:
 
   WARC -> HTTP header strip -> HTML-to-text -> quality gate
-       -> incremental MinHash dedup (probe index, append survivors)
+       -> incremental MinHash dedup (probe index, fold survivors in)
        -> language mixture rebalance
        -> [optional] DSIR token-budget selection (keep the docs most
           like a target distribution until the budget fills)
@@ -17,8 +17,12 @@ previously accepted (the O(batch) incremental architecture, never a
 corpus re-pair). The dedup tiers are operators/dedup_fuzzy.py:
 incremental_dedup_keep, the same core the streaming daemon
 (streaming/dedup_stream.py) runs per micro-batch; this plan adds the
-id-containment pre-filter and folds survivors with
-minhash_index_build/append.
+id-containment pre-filter. Survivors fold into the index through the
+daemon's fold too (dedup_fuzzy.write_postings): one small increment per
+drop under mh_index/{banded,sigs,hashes}_inc/ingest_batch=<drop tag>/,
+so a re-run of the same drop tag replaces its own increment. `cli dedup
+compact --index {workdir}/mh_index` folds the increments into the
+prefix-clustered base.
 
 Cost model (the r7 rework): every stage boundary is localCheckpoint'ed
 once, so the expensive upstream work — the WARC parse + HTML extraction,
@@ -407,26 +411,22 @@ def curate_crawl(
     _dmark("sign")
 
     idx = os.path.join(workdir, "mh_index")
-    idx_exists = dedup_fuzzy.minhash_index_exists(spark, idx)
     fresh = good
-    if idx_exists:
-        # id-level containment: a re-crawl of a page we already ingested
-        # carries the SAME doc_id, which the near-dup probe treats as
-        # "self" and skips — drop it before the content tiers
-        existing = spark.read.parquet(os.path.join(idx, "sigs")).select(
-            "doc_id"
-        )
+    # id-level containment: a re-crawl of a page we already ingested
+    # carries the SAME doc_id, which the near-dup probe treats as "self"
+    # and skips — drop it before the content tiers
+    existing = dedup_fuzzy._read_store(spark, idx, "sigs", ["doc_id"])
+    if existing is not None:
         fresh = good.join(existing, "doc_id", "left_anti")
     # Stage boundary 3: the accepted set (index fold + lang-id + count).
     kept = dedup_fuzzy.incremental_dedup_keep(
         spark, idx, fresh, est_threshold, sigs=sigs, mark=_dmark
     )
     kept_sigs = sigs.join(kept.select("doc_id"), "doc_id", "left_semi")
-    if idx_exists:
-        dedup_fuzzy.minhash_index_append(kept, idx, sigs=kept_sigs)
-    else:
-        dedup_fuzzy.minhash_index_build(kept, idx, sigs=kept_sigs)
-    n_kept = kept.count()
+    # the fold's row count is the kept count: one signature row per doc
+    n_kept = dedup_fuzzy.write_postings(
+        kept, idx, batch_tag=drop_tag, sigs=kept_sigs
+    )
     _dmark("fold")
     _mark("dedup")
 

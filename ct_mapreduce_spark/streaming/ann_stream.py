@@ -33,7 +33,7 @@ Replay safety (foreachBatch re-delivers a batch after a crash): each
 trigger's write is keyed by its batch id and performed with DYNAMIC
 partition overwrite, so a replayed batch overwrites exactly its own
 ingest_batch partition — at-least-once delivery becomes an idempotent
-fold, the same contract as dedup_stream.write_postings.
+fold, the same contract as dedup_fuzzy.write_postings.
 
 Reference anchor: SURVEY §2.8's T1-T3 ingest loop (backpressure via
 trigger bounds, resume via checkpointLocation — ct-fetch.go:371-392);

@@ -17,8 +17,8 @@ cloned session cannot silently run it STATIC), so a replayed batch
 overwrites exactly its own partitions — postings, signatures, and
 keep-list are idempotent without a transactional store. (Plain parquet
 `append` would double-insert postings on replay, inflating
-n_bands_matched; that is why this module maintains its own
-ingest_batch=... partition level rather than calling
+n_bands_matched; that is why the fold is dedup_fuzzy.write_postings,
+whose increments carry an ingest_batch=... partition level, rather than
 minhash_index_append.)
 
 Reference anchor: the daemon shape mirrors SURVEY §2.8's T1-T3 ingest
@@ -34,79 +34,14 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from ct_mapreduce_spark.operators.dedup_fuzzy import (
-    _banded_frame,
-    _batch_hash_frame,
+    _overwrite_batch,
     incremental_dedup_keep,
     minhash_signatures,
+    write_postings,
 )
 from ct_mapreduce_spark.operators.util import fan_out
 
 DOCS_SCHEMA = "doc_id long, text string"
-
-
-def write_postings(
-    docs: DataFrame,
-    path: str,
-    batch_tag: str,
-    text_col: str = "text",
-    k: int = 3,
-    num_hashes: int = 64,
-    bands: int = 16,
-    seed: int = 42,
-    sigs: DataFrame | None = None,
-) -> None:
-    """Write one batch's posting lists + signatures under
-    ingest_batch=<batch_tag>, idempotently (dynamic partition overwrite:
-    a replay of the same tag replaces its own partitions and no others).
-
-    Layout (r7 LSM shape): per-batch postings and hashes go to INCREMENT
-    trees — {path}/banded_inc/ingest_batch=T/ and
-    {path}/hashes_inc/ingest_batch=T/, a few coalesced files per trigger
-    with the prefix kept as a DATA column — because a pfx-partitioned
-    per-batch write costs one file per non-empty prefix (~500 slivers for
-    a toy batch; the daemon soak measured per-batch walls growing 12 ->
-    26 s over 20 batches from accumulated files/dirs alone). Probes read
-    base ∪ increments transparently (_read_store: the base prunes on
-    pfx, the small increments row-filter); minhash_index_compact folds
-    increments into the pfx-clustered base on the compaction cadence.
-    {path}/sigs/ingest_batch=T/ stays a single tree (it has no prefix
-    level; writes are coalesced). Initialize an index by writing the
-    historical corpus under a 'base' tag — or just start streaming (cold
-    start) and compact later. `sigs` param: optional precomputed
-    materialized signatures covering exactly `docs` (the stream
-    processor signs each micro-batch once and shares the frame across
-    probe/within/fold)."""
-    if sigs is None:
-        sigs = minhash_signatures(
-            fan_out(docs), text_col, k, num_hashes, seed
-        ).localCheckpoint(eager=True)
-    banded = _banded_frame(sigs, num_hashes, bands).select(
-        "doc_id",
-        "band",
-        "bucket",
-        F.substring("bucket", 1, 2).alias("pfx"),
-        F.lit(batch_tag).alias("ingest_batch"),
-    )
-    _overwrite_batch(banded.coalesce(8), path + "/banded_inc")
-    _overwrite_batch(
-        sigs.coalesce(4).withColumn("ingest_batch", F.lit(batch_tag)),
-        path + "/sigs",
-    )
-    hashes = (
-        _batch_hash_frame(sigs)
-        .select("kind", "hash", "hpfx")
-        .distinct()
-        .withColumn("ingest_batch", F.lit(batch_tag))
-    )
-    _overwrite_batch(hashes.coalesce(2), path + "/hashes_inc")
-
-
-def _overwrite_batch(df: DataFrame, path: str) -> None:
-    """Replace exactly the ingest_batch partitions `df` carries under
-    `path` (dynamic partition overwrite, set on the writer)."""
-    df.write.mode("overwrite").option(
-        "partitionOverwriteMode", "dynamic"
-    ).partitionBy("ingest_batch").parquet(path)
 
 
 def start_dedup_stream(
@@ -151,7 +86,8 @@ def start_dedup_stream(
     Cold start is supported: with no index at index_path the first
     micro-batch runs within-batch dedup only and its survivors seed the
     index. Seeding a historical corpus first (write_postings under a
-    'base' tag) remains the way to dedup against pre-stream history.
+    'base' tag, or minhash_index_build) remains the way to dedup against
+    pre-stream history.
 
     Lifecycle: each trigger adds a few coalesced increment files (the
     LSM shape in write_postings — per-batch walls measured FLAT at

@@ -92,8 +92,9 @@ def run(spark, workdir: str):
     )
     print("drop 2:", stats2)
 
-    # lifecycle: after many drops the index accumulates small posting
-    # files; compaction rewrites them pfx-clustered (crash-safe swap)
+    # lifecycle: each drop folds into the index as one small increment
+    # (mh_index/*_inc/ingest_batch=<drop tag>); compaction folds the
+    # increments into the pfx-clustered base (crash-safe swap)
     from ct_mapreduce_spark.operators.dedup_fuzzy import minhash_index_compact
 
     files = minhash_index_compact(spark, f"{workdir}/mh_index")

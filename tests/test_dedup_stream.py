@@ -92,7 +92,7 @@ def test_stream_dedup_replay_idempotent(spark, corpus_and_batches):
     first = sorted(
         tuple(r) for r in spark.read.parquet(keep).select("doc_id").collect()
     )
-    sigs_files_first = len(glob.glob(idx + "/sigs/ingest_batch=0/*.parquet"))
+    sigs_files_first = len(glob.glob(idx + "/sigs_inc/ingest_batch=0/*.parquet"))
     # crash-replay simulation: wipe the checkpoint so BOTH batches are
     # re-delivered with the same batch ids against the already-written
     # index/keep partitions
@@ -110,7 +110,7 @@ def test_stream_dedup_replay_idempotent(spark, corpus_and_batches):
     )
     assert second == first
     # dynamic overwrite replaced the partition instead of doubling it
-    sigs_files_second = len(glob.glob(idx + "/sigs/ingest_batch=0/*.parquet"))
+    sigs_files_second = len(glob.glob(idx + "/sigs_inc/ingest_batch=0/*.parquet"))
     assert sigs_files_second == sigs_files_first
 
 
@@ -386,10 +386,10 @@ def test_stream_lm_order2_over_order1_model_is_an_error(spark, tmp_path):
 def test_compact_exclude_tags_preserves_inflight(spark, tmp_path):
     """minhash_index_compact(exclude_tags=...): committed increment tags
     fold into the pfx-clustered base; the excluded (in-flight) tag's
-    partitions survive untouched in the increment trees and the sigs
-    tree, probe results are bit-identical, and a replayed dynamic
-    overwrite of the excluded tag leaves the probe unchanged (the
-    auto-compaction replay contract)."""
+    partitions survive untouched in the increment trees, probe results
+    are bit-identical, and a replayed dynamic overwrite of the excluded
+    tag leaves the probe unchanged (the auto-compaction replay
+    contract)."""
     from ct_mapreduce_spark.operators.dedup_fuzzy import (
         minhash_index_compact,
     )
@@ -423,10 +423,11 @@ def test_compact_exclude_tags_preserves_inflight(spark, tmp_path):
         assert tags == {"ingest_batch=2"}, (tree, tags)
     sig_tags = {
         n
-        for n in os.listdir(f"{idx}/sigs")
+        for n in os.listdir(f"{idx}/sigs_inc")
         if n.startswith("ingest_batch=")
     }
-    assert sig_tags == {"ingest_batch=base", "ingest_batch=2"}
+    assert sig_tags == {"ingest_batch=2"}
+    assert "ingest_batch=base" in os.listdir(f"{idx}/sigs")
     assert os.path.isdir(f"{idx}/banded")  # pfx-clustered base exists
     assert probe_kept() == before
     # replay of the excluded tag: dynamic overwrite replaces its own

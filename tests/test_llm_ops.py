@@ -456,6 +456,28 @@ def test_repeated_doc_id_is_never_dropped_by_itself(spark, tmp_path):
     assert {r.doc_id for r in kept.collect()} == {1, 2}
 
 
+def test_pairing_width_bound(spark, docs):
+    """Caps up to _ARRAY_PAIRING_MAX_WIDTH (2048) pair through one sorted
+    member array per cell; a wider cap falls back to the sort-merge
+    self-join, since one cell's W(W-1)/2 pair array would fill a single
+    task row. Both emit the same pairs, also for a repeated doc_id."""
+    bound = dedup_fuzzy._ARRAY_PAIRING_MAX_WIDTH
+    assert bound == 2048
+    first = [r.doc_id for r in docs.orderBy("doc_id").limit(5).collect()]
+    df = docs.select("doc_id", "text")
+    df = df.unionByName(df.where(F.col("doc_id").isin(first)))
+
+    def run(width):
+        pairs = dedup_fuzzy.minhash_lsh_pairs(df, max_bucket_width=width)
+        plan = pairs._jdf.queryExecution().optimizedPlan().toString()
+        return sorted(tuple(r) for r in pairs.collect()), "collect_list" in plan
+
+    at, at_arrays = run(bound)
+    above, above_arrays = run(bound + 1)
+    assert at_arrays and not above_arrays
+    assert at and above == at
+
+
 def test_minhash_dedup_keep_uncapped_signs_once(spark):
     """minhash_dedup_keep(max_bucket_width=None) runs the signature
     stage once: a row-counting stage spliced upstream of the signature

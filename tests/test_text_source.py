@@ -286,7 +286,9 @@ def test_curate_second_drop_job_count(spark, tmp_path):
     16 new pages. Each checkpoint in the dedup core is eager or lazy by
     design (an eager one is its own action job, a lazy one rides the
     next action), so a posture change shows up here as a different
-    count. Jobs that adaptive execution submits from its own threads to
+    count. The index fold writes one increment per drop, so no probe
+    pays a listing job over the base's prefix directories. Jobs that
+    adaptive execution submits from its own threads to
     materialize shuffle and broadcast stages are not counted: whether
     one of them runs or is cancelled depends on timing (the total
     measured 70 or 71 on the same tree), while the action jobs do not."""
@@ -331,7 +333,82 @@ def test_curate_second_drop_job_count(spark, tmp_path):
         for j in tracker.getJobIdsForGroup(group)
         if "withThreadLocalCaptured" not in result_stage(j).name
     ]
-    assert len(actions) == 21
+    assert len(actions) == 19
+
+
+def test_fold_over_flat_index_keeps_flat_signatures(spark, tmp_path):
+    """An index seeded by minhash_index_build holds flat files in
+    {idx}/sigs. Folding a batch with write_postings must leave every one
+    of those signatures visible: to minhash_probe_index, which scores
+    candidates against them, before and after compaction, and to
+    curate's id containment, which drops a re-crawled record id whatever
+    its new content. (Spark reads a tree that mixes flat files with
+    ingest_batch= directories as the partitioned rows alone.)"""
+    from ct_mapreduce_spark.operators.dedup_fuzzy import (
+        minhash_index_build,
+        minhash_index_compact,
+        minhash_probe_index,
+        write_postings,
+    )
+    from ct_mapreduce_spark.plans.curate import curate_crawl
+    from ct_mapreduce_spark.sources import text_source
+
+    n = 16
+    record_ids = [f"<urn:uuid:f{i:07d}>" for i in range(n)]
+    # the indexed texts share no words with the re-crawl's pages
+    texts = [
+        f"archived copy {i} " + " ".join(f"a{i}w{j}" for j in range(30))
+        for i in range(n)
+    ]
+    flat = spark.createDataFrame(
+        list(zip(record_ids, texts)), "record_id string, text string"
+    ).select(F.xxhash64("record_id").alias("doc_id"), "text")
+    idx = str(tmp_path / "wd" / "mh_index")
+    minhash_index_build(flat, idx)
+    batch = spark.createDataFrame(
+        [(10**6 + i, f"folded batch page {i} with its own words " * 3)
+         for i in range(3)],
+        "doc_id long, text string",
+    )
+    write_postings(batch, idx, batch_tag="seed-batch")
+
+    copies = spark.createDataFrame(
+        [(2 * 10**6 + i, t) for i, t in enumerate(texts)],
+        "doc_id long, text string",
+    )
+    by_text = {r.text: r.doc_id for r in flat.collect()}
+    want = {(2 * 10**6 + i, by_text[t]) for i, t in enumerate(texts)}
+
+    def found():
+        return {
+            (r.new_doc_id, r.corpus_doc_id)
+            for r in minhash_probe_index(spark, idx, copies)
+            .where(F.col("est_jaccard") == 1.0)
+            .collect()
+        }
+
+    assert found() == want
+    # compaction folds the increment into the flat base without loss
+    minhash_index_compact(spark, idx)
+    assert found() == want
+
+    recs = [
+        {
+            "warc_type": "response",
+            "url": f"https://crawl.example/page/{i}",
+            "date": "2026-01-02T00:00:00Z",
+            "record_id": record_ids[i],
+            "content_type": "application/http; msgtype=response",
+            "body": text_source.synthetic_html_body(i),
+        }
+        for i in range(n)
+    ]
+    crawl = tmp_path / "crawl"
+    crawl.mkdir()
+    (crawl / "seg-000.warc").write_bytes(text_source.encode_warc(recs))
+    stats = curate_crawl(spark, str(crawl), str(tmp_path / "wd"))
+    assert stats["quality_survivors"] == n
+    assert stats["after_dedup"] == 0  # every record id is already indexed
 
 
 def test_curate_strip_boilerplate(spark, tmp_path):
@@ -419,7 +496,9 @@ def test_cli_curate_subcommand(spark, tmp_path):
         spark=spark,
     )
     assert rc == 0
-    assert (tmp_path / "wd" / "mh_index" / "sigs").exists()
+    from ct_mapreduce_spark.operators.dedup_fuzzy import minhash_index_exists
+
+    assert minhash_index_exists(spark, str(tmp_path / "wd" / "mh_index"))
     export = tmp_path / "wd" / "export" / "drop=drop-0000"
     assert len(list(export.glob("part-*.json.gz"))) == 1
     # r8 flags reach the plan: decontam dictionary artifact + PII scrub
