@@ -25,8 +25,3 @@ def normalize_crl_dps(crl_dps: Column | str) -> Column:
     kept = F.filter(trimmed, lambda u: u.rlike("^https?://"))
     return F.array_distinct(kept)
 
-
-def normalized_crl_dp(url: Column | str) -> Column:
-    """Scalar form: trimmed URL, or NULL when the scheme is rejected."""
-    t = F.trim(_col(url))
-    return F.when(t.rlike("^https?://"), t)

@@ -44,12 +44,6 @@ def first_seen(
     return out.select(*keys, *[F.col(f"_row.{c}").alias(c) for c in payload])
 
 
-def first_seen_any(df: DataFrame, keys: Sequence[str] = DEFAULT_KEY) -> DataFrame:
-    """Arrival-order dedup, matching the reference's nondeterminism —
-    cheapest possible plan (no ordering requirement)."""
-    return df.dropDuplicates(list(keys))
-
-
 def was_unknown_flags(
     df: DataFrame,
     keys: Sequence[str] = DEFAULT_KEY,

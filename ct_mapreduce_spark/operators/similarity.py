@@ -127,29 +127,12 @@ def _sql_double_array(vals) -> str | None:
     return "array(%s)" % ", ".join(parts)
 
 
-def signature_bits(vec: Column, planes: list[list[float]]) -> Column:
-    """array<int> of sign bits, one per hyperplane — pure expression
-    form (interpreted higher-order folds; fine for query-sized inputs,
-    see signature_bits_udf for corpus-sized ones)."""
-    arrs = [_sql_double_array(p) for p in planes]
-    if all(a is not None for a in arrs):
-        plane_arr = F.expr("array(%s)" % ", ".join(arrs))
-    else:  # non-finite plane value: builder-API form
-        plane_arr = F.array(
-            *[F.array(*[F.lit(x) for x in p]) for p in planes]
-        )
-    return F.transform(
-        plane_arr,
-        lambda p: F.when(_dot(vec, p) >= 0, F.lit(1)).otherwise(F.lit(0)),
-    )
-
-
 def signature_bits_udf(planes: list[list[float]]):
     """Vectorized sign bits: one (batch x dim) @ (dim x n_bits) numpy
-    matmul per Arrow batch — ~n_bits x faster than the interpreted
-    per-plane fold on corpus-sized inputs. Sign of an identical float64
-    dot product is engine-deterministic, so both forms agree; per-row
-    CPU-dense work is the sanctioned vectorized-Python case."""
+    matmul per Arrow batch — ~n_bits x faster than an interpreted
+    per-plane fold of higher-order SQL functions on corpus-sized inputs.
+    Sign of an identical float64 dot product is engine-deterministic;
+    per-row CPU-dense work is the sanctioned vectorized-Python case."""
     pm = np.asarray(planes, dtype=np.float64).T  # (dim, n_bits)
 
     @F.pandas_udf(T.ArrayType(T.IntegerType()))

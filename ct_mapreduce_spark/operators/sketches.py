@@ -52,14 +52,6 @@ def hll_rollup(
     )
 
 
-def hll_estimate(sketches: DataFrame, sketch_col: str = "hll") -> DataFrame:
-    """Project estimates from a sketch column (register-deterministic)."""
-    return sketches.withColumn(
-        "est_distinct",
-        F.hll_sketch_estimate(F.col(sketch_col)).cast("long"),
-    )
-
-
 def _cms_col(key, row_i: int, seed: int, width: int):
     """Row-i column index for a key: the first 8 hex chars of
     md5(key + '#i#seed') as an integer, mod width. md5 (not xxhash64)

@@ -13,6 +13,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ct_mapreduce_spark.schemas import LEAF_COUNTS
+
 
 def stats_rollup(certs: DataFrame, exact: bool = True) -> DataFrame:
     """Rollup over (issuer_id, exp_date): distinct serial counts.
@@ -116,7 +118,11 @@ def update_leaf_counts(
     Counts merge as sums; the table is written temp-dir-then-rename-aside
     (same crash contract as the log-state sink), and a missing table is
     an EXPLICIT exists check — read errors on an existing table propagate
-    rather than silently double-counting. Returns the merged frame."""
+    rather than silently double-counting.
+
+    Returns the merged table as written. The table is read (here and in
+    the returned frame) with its declared schema, LEAF_COUNTS, so neither
+    read submits a job to infer a schema from a footer."""
     from ct_mapreduce_spark.fsutil import path_exists, recover_swap
 
     delta = fresh_deduped.groupBy("issuer_id", "exp_date").agg(
@@ -125,7 +131,9 @@ def update_leaf_counts(
     )
     recover_swap(spark, agg_path)
     current = (
-        spark.read.parquet(agg_path) if path_exists(spark, agg_path) else None
+        spark.read.schema(LEAF_COUNTS).parquet(agg_path)
+        if path_exists(spark, agg_path)
+        else None
     )
     merged = (
         delta
@@ -143,9 +151,11 @@ def update_leaf_counts(
 def _write_leaf_counts(spark, agg_path: str, table: DataFrame) -> DataFrame:
     from ct_mapreduce_spark.fsutil import TMP_SUFFIX, swap_into_place
 
-    table.write.mode("overwrite").parquet(agg_path + TMP_SUFFIX)
+    table.select(*LEAF_COUNTS.fieldNames()).write.mode("overwrite").parquet(
+        agg_path + TMP_SUFFIX
+    )
     swap_into_place(spark, agg_path + TMP_SUFFIX, agg_path)
-    return spark.read.parquet(agg_path)
+    return spark.read.schema(LEAF_COUNTS).parquet(agg_path)
 
 
 def recompute_leaf_counts(spark, agg_path: str, store: DataFrame) -> DataFrame:

@@ -44,12 +44,19 @@ def run_parallel(*thunks) -> None:
     them sequentially). Used for multi-sink writes to DISJOINT
     directories that share one materialized input — the later jobs'
     tasks back-fill cores the earlier jobs' commit tails leave idle.
+    Each thunk runs with the caller's local properties (job group,
+    description, scheduler pool), captured here in the caller's thread,
+    so its jobs count, cancel and schedule with the caller's.
     Errors propagate (first one raised) after all jobs settle, so a
     failed sibling can't leave a write silently unchecked."""
     from concurrent.futures import ThreadPoolExecutor
 
+    from pyspark import inheritable_thread_target
+    from pyspark.sql import SparkSession
+
+    inherit = inheritable_thread_target(SparkSession.active())
     with ThreadPoolExecutor(max_workers=len(thunks)) as pool:
-        futures = [pool.submit(t) for t in thunks]
+        futures = [pool.submit(inherit(t)) for t in thunks]
         errs = []
         for f in futures:
             try:

@@ -10,6 +10,10 @@ Mapping (see SURVEY.md §1.2):
 - ExpDate     (storage/types.go:333-384)  -> TimestampType `not_after`
                                              + derived string buckets
 - CertificateLog (storage/types.go:25-42) -> `LOG_STATES`
+- UniqueCertIdentifier (storage/types.go:273-306)
+                                          -> `STORE_KEYS`
+- per-(issuer, expDate) SCARD lines (storage-statistics.go:49-55)
+                                          -> `LEAF_COUNTS`
 """
 
 from __future__ import annotations
@@ -49,6 +53,29 @@ LOG_STATES = T.StructType(
         T.StructField("max_entry", T.LongType(), False),
         T.StructField("last_entry_time", T.TimestampType(), True),
         T.StructField("last_update_time", T.TimestampType(), True),
+    ]
+)
+
+# Key columns of the partitioned certificate store (plans/ingest.write_store):
+# what the cross-run gate (sinks.append_new_to_store) reads back. The
+# partition columns come back as the declared strings, never re-inferred.
+STORE_KEYS = T.StructType(
+    [
+        T.StructField("exp_date", T.StringType(), True),
+        T.StructField("issuer_id", T.StringType(), True),
+        T.StructField("serial", T.BinaryType(), True),
+    ]
+)
+
+# The maintained leaf-statistics table (operators/statistics.py), written
+# with exactly these columns in this order. Nullable, as Spark reads every
+# parquet column back.
+LEAF_COUNTS = T.StructType(
+    [
+        T.StructField("issuer_id", T.StringType(), True),
+        T.StructField("exp_date", T.StringType(), True),
+        T.StructField("n_serials", T.LongType(), True),
+        T.StructField("n_rows", T.LongType(), True),
     ]
 )
 

@@ -9,16 +9,16 @@ S6  log-state table     (storage/localdiskbackend.go:201-210 /
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from ct_mapreduce_spark.functions.codecs import serial_hex
 from ct_mapreduce_spark.fsutil import (
     TMP_SUFFIX,
+    count_parquet_files,
     path_exists,
     recover_swap,
     swap_into_place,
 )
-from ct_mapreduce_spark.schemas import LOG_STATES
+from ct_mapreduce_spark.schemas import LOG_STATES, STORE_KEYS
 
 
 def write_serial_list(deduped: DataFrame, path: str, mode: str = "overwrite") -> None:
@@ -92,9 +92,10 @@ def append_new_to_store(
     idempotent.
 
     Scale shape: the existing-keys read is COLUMN-PRUNED to the three
-    key columns (check ReadSchema — the payload bytes never move), the
-    anti-join keys match the store's partition layout, and the append
-    clusters like write_store. Returns (n_appended, the materialized
+    key columns (check ReadSchema — the payload bytes never move) and
+    takes their declared schema (STORE_KEYS), so no job reads a footer
+    to infer it; the anti-join keys match the store's partition layout,
+    and the append clusters like write_store. Returns (n_appended, the materialized
     fresh frame) so callers can chain incremental maintenance — e.g.
     operators/statistics.update_leaf_counts — without recomputing the
     anti-join. First-run detection is an EXPLICIT exists check: a failed
@@ -104,9 +105,7 @@ def append_new_to_store(
     spark = deduped.sparkSession
     recover_swap(spark, path)
     if path_exists(spark, path):
-        existing = spark.read.parquet(path).select(
-            "exp_date", "issuer_id", "serial"
-        )
+        existing = spark.read.schema(STORE_KEYS).parquet(path)
     else:  # first run: nothing to exclude
         existing = None
     fresh = (
@@ -145,23 +144,16 @@ def compact_store(spark: SparkSession, path: str) -> tuple[int, int]:
 
     Rewrites via temp-dir-then-rename-aside-swap (fsutil) so a
     mid-compaction failure never loses the store and an interrupted swap
-    is recoverable. Returns (files_before, files_after)."""
-    jvm = spark.sparkContext._jvm
-    hconf = spark.sparkContext._jsc.hadoopConfiguration()
-    dst = jvm.org.apache.hadoop.fs.Path(path)
-    fs = dst.getFileSystem(hconf)
+    is recoverable. Returns (files_before, files_after), both counted by
+    fsutil.count_parquet_files like the index compactors: data files
+    only, skipping `_`/`.` trees (an aborted job's `_temporary`) as
+    Spark's listing does.
 
-    def _count_files(p) -> int:
-        n = 0
-        it = fs.listFiles(p, True)
-        while it.hasNext():
-            f = it.next()
-            if f.getPath().getName().endswith(".parquet"):
-                n += 1
-        return n
-
+    The full-store read keeps the schema in the file footers: the
+    rewrite carries every column, and a declared schema would silently
+    drop any column it does not list."""
     recover_swap(spark, path)
-    before = _count_files(dst)
+    before = count_parquet_files(spark, path)
     tmp_path = path + TMP_SUFFIX
     (
         spark.read.parquet(path)
@@ -171,4 +163,4 @@ def compact_store(spark: SparkSession, path: str) -> tuple[int, int]:
         .parquet(tmp_path)
     )
     swap_into_place(spark, tmp_path, path)
-    return before, _count_files(dst)
+    return before, count_parquet_files(spark, path)

@@ -1886,6 +1886,17 @@ def test_fan_out_uses_scan_estimate_without_rdd(spark):
     assert big > spark.sparkContext.defaultParallelism
 
 
+def test_run_parallel_keeps_callers_job_group(spark, action_jobs):
+    """Jobs that run_parallel submits from its worker threads belong to
+    the caller's job group, so a per-group job count (and a group cancel)
+    covers them."""
+    from ct_mapreduce_spark.operators.util import run_parallel
+
+    rdd = spark.sparkContext.parallelize(range(8), 2)
+    _, jobs = action_jobs("run-parallel", lambda: run_parallel(rdd.count, rdd.sum))
+    assert len(jobs) == 2
+
+
 def test_local_frame_preserves_nan(spark):
     """A float NaN cell must survive local_frame as NaN, not NULL: the
     Arrow ingest (from_pandas) nulls top-level NaN, so NaN-bearing rows

@@ -130,6 +130,132 @@ def test_compact_store_reduces_files_keeps_data(spark, tmp_path):
     assert spark.read.parquet(path).selectExpr("sum(entry_id)").first()[0] == before_sum
 
 
+def test_compact_store_counts_only_data_files(spark, tmp_path):
+    """compact_store counts the files Spark reads as the store: a stray
+    file under an aborted job's `_temporary` tree is not a data file
+    (Spark's listing skips `_` trees, as the index compactors' count
+    does). Three writes into three partitions leave 9 data files;
+    compaction leaves one per partition."""
+    import os
+    import shutil
+
+    from ct_mapreduce_spark.plans.ingest import write_store
+    from ct_mapreduce_spark.sources.sinks import append_new_to_store, compact_store
+
+    parts = [("2030-01-01-00", "iss-a"), ("2030-01-01-00", "iss-b"), ("2030-01-02-00", "iss-a")]
+
+    def rows(serials):  # one row per serial in each of the three partitions
+        return spark.createDataFrame(
+            [
+                (exp, iss, bytes([k, s]), 16 * k + s)
+                for k, (exp, iss) in enumerate(parts)
+                for s in serials
+            ],
+            "exp_date string, issuer_id string, serial binary, entry_id long",
+        )
+
+    path = str(tmp_path / "store")
+    write_store(rows([1, 2]), path)
+    append_new_to_store(rows([3, 4]), path)
+    append_new_to_store(rows([5, 6]), path)
+    data = [
+        os.path.join(d, n)
+        for d, _, names in os.walk(path)
+        for n in names
+        if n.endswith(".parquet")
+    ]
+    assert len(data) == 9
+    stray = os.path.join(path, "_temporary", "0")
+    os.makedirs(stray)
+    shutil.copy(data[0], os.path.join(stray, "part-stray.parquet"))
+
+    assert compact_store(spark, path) == (9, 3)
+    assert spark.read.parquet(path).count() == 18
+
+
+def test_ct_tables_match_declared_schemas(spark, tmp_path):
+    """The CT tables the engine reads back with a declared schema are
+    written with exactly that schema: the store's key columns (STORE_KEYS,
+    read by append_new_to_store's gate) after write_store and after an
+    append, and the leaf-count table (LEAF_COUNTS, read by
+    update_leaf_counts) from recompute_leaf_counts and from both
+    update_leaf_counts paths (new table, merge). A writer that renames or
+    retypes a column fails here instead of the declared read silently
+    reading NULLs or casting."""
+    import datetime as dt
+
+    from ct_mapreduce_spark.operators.statistics import (
+        recompute_leaf_counts,
+        update_leaf_counts,
+    )
+    from ct_mapreduce_spark.plans.ingest import ingest_batch, write_store
+    from ct_mapreduce_spark.schemas import LEAF_COUNTS, STORE_KEYS
+    from ct_mapreduce_spark.sources.certificates import synthetic_certificates
+    from ct_mapreduce_spark.sources.sinks import append_new_to_store
+
+    def inferred(p, cols=None):
+        df = spark.read.parquet(p)
+        return (df.select(*cols) if cols else df).schema
+
+    now = dt.datetime(2024, 1, 2, tzinfo=dt.timezone.utc)
+    certs = synthetic_certificates(spark, n=400, seed=8)
+    b1 = ingest_batch(certs.where("entry_id < 300"), now=now)
+    store = str(tmp_path / "store")
+    write_store(b1, store)
+    assert inferred(store, STORE_KEYS.fieldNames()) == STORE_KEYS
+    n, fresh = append_new_to_store(
+        ingest_batch(certs.where("entry_id >= 200"), now=now), store
+    )
+    assert n > 0
+    assert inferred(store, STORE_KEYS.fieldNames()) == STORE_KEYS
+
+    full = str(tmp_path / "leaf_full")
+    assert recompute_leaf_counts(spark, full, spark.read.parquet(store)).schema == LEAF_COUNTS
+    assert inferred(full) == LEAF_COUNTS
+    inc = str(tmp_path / "leaf_inc")
+    for batch in (b1, fresh):  # new table, then a merge into it
+        assert update_leaf_counts(spark, inc, batch).schema == LEAF_COUNTS
+        assert inferred(inc) == LEAF_COUNTS
+
+
+def test_append_cycle_job_count(spark, tmp_path, action_jobs):
+    """Pins the driver-submitted jobs (see the action_jobs fixture) of
+    one `fetch --append` cycle on an existing store and leaf table:
+    append_new_to_store then update_leaf_counts. The three reads of
+    tables the engine wrote itself (the gate's key columns, the current
+    leaf table, the leaf table returned) take declared schemas, so none
+    submits a job to infer a schema from a footer; one that goes back to
+    inference adds a job here. The one job left lists the store's
+    partition directories, which are more than Spark's 32-path threshold
+    for listing with a job."""
+    import datetime as dt
+
+    from ct_mapreduce_spark.operators.statistics import (
+        recompute_leaf_counts,
+        update_leaf_counts,
+    )
+    from ct_mapreduce_spark.plans.ingest import ingest_batch, write_store
+    from ct_mapreduce_spark.sources.certificates import synthetic_certificates
+    from ct_mapreduce_spark.sources.sinks import append_new_to_store
+
+    now = dt.datetime(2024, 1, 2, tzinfo=dt.timezone.utc)
+    certs = synthetic_certificates(spark, n=400, seed=9)
+    store = str(tmp_path / "store")
+    leaf = store + "_leaf_counts"
+    write_store(ingest_batch(certs.where("entry_id < 300"), now=now), store)
+    recompute_leaf_counts(spark, leaf, spark.read.parquet(store))
+    batch = ingest_batch(certs.where("entry_id >= 200"), now=now)
+
+    def cycle():
+        n, fresh = append_new_to_store(batch, store)
+        update_leaf_counts(spark, leaf, fresh)
+        return n
+
+    n, jobs = action_jobs("append-cycle", cycle)
+    assert n > 0
+    assert len(jobs) == 1
+
+
 def test_corrupt_store_read_propagates(spark, tmp_path):
     """A failed read of an EXISTING store must raise, never silently
     disable the cross-run dedup gate (which would append duplicate keys

@@ -278,8 +278,8 @@ def test_curate_scans_warc_once(spark, tmp_path, monkeypatch):
     assert acc.value == 32  # every fixture record seen exactly once
 
 
-def test_curate_second_drop_job_count(spark, tmp_path):
-    """Pins the action job count of a second crawl drop, whose
+def test_curate_second_drop_job_count(spark, tmp_path, action_jobs):
+    """Pins the driver-submitted job count of a second crawl drop, whose
     dedup runs every tier (id containment, exact and near-dup index
     probes, the within-batch tiers) on non-empty input: 8 pages
     re-crawled under their own record ids, 16 re-crawled under new ids,
@@ -287,11 +287,11 @@ def test_curate_second_drop_job_count(spark, tmp_path):
     design (an eager one is its own action job, a lazy one rides the
     next action), so a posture change shows up here as a different
     count. The index fold writes one increment per drop, so no probe
-    pays a listing job over the base's prefix directories. Jobs that
-    adaptive execution submits from its own threads to
-    materialize shuffle and broadcast stages are not counted: whether
-    one of them runs or is cancelled depends on timing (the total
-    measured 70 or 71 on the same tree), while the action jobs do not."""
+    pays a listing job over the base's prefix directories. The fold's
+    concurrent writes run in the drop's job group, so the two of them
+    that run outside adaptive execution (no exchange in their plans) are
+    counted. Jobs of adaptive execution's query stages are not (see the
+    action_jobs fixture)."""
     from ct_mapreduce_spark.plans.curate import curate_crawl
     from ct_mapreduce_spark.sources import text_source
 
@@ -313,27 +313,12 @@ def test_curate_second_drop_job_count(spark, tmp_path):
     crawl2 = tmp_path / "c2"
     crawl2.mkdir()
     (crawl2 / "seg-000.warc").write_bytes(text_source.encode_warc(recs))
-    sc = spark.sparkContext
-    group = "curate-second-drop"
-    sc.setJobGroup(group, "curate second drop")
-    try:
-        stats = curate_crawl(spark, str(crawl2), wd)
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
+    stats, actions = action_jobs(
+        "curate-second-drop", lambda: curate_crawl(spark, str(crawl2), wd)
+    )
     assert stats["extracted"] == 40
     assert stats["after_dedup"] == 16  # only the 16 new pages survive
-    tracker = sc.statusTracker()
-
-    def result_stage(job_id):
-        return tracker.getStageInfo(max(tracker.getJobInfo(job_id).stageIds))
-
-    actions = [
-        j
-        for j in tracker.getJobIdsForGroup(group)
-        if "withThreadLocalCaptured" not in result_stage(j).name
-    ]
-    assert len(actions) == 19
+    assert len(actions) == 21
 
 
 def test_fold_over_flat_index_keeps_flat_signatures(spark, tmp_path):
