@@ -34,7 +34,7 @@ from typing import Callable
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -47,6 +47,7 @@ from ct_mapreduce_spark.operators.util import (
     fan_out,
     run_parallel as _run_parallel,
 )
+from ct_mapreduce_spark.schemas import BANDED_INC, HASHES_INC, SIGS_INC
 
 def exact_dedup(docs: DataFrame, text_col: str = "text") -> DataFrame:
     """Exact dedup by content hash: canonical row = min doc_id (same
@@ -1206,7 +1207,17 @@ def _try_read_parquet(spark, p: str):
         raise
 
 
-def _read_store(spark, path: str, store: str, columns: list[str]):
+# Declared layouts of write_postings' increment trees, by store.
+_INC_SCHEMAS = {"banded": BANDED_INC, "sigs": SIGS_INC, "hashes": HASHES_INC}
+
+
+def _read_store(
+    spark,
+    path: str,
+    store: str,
+    columns: list[str],
+    base_filter: Callable[[], Column] | None = None,
+):
     """Union view of an index store's BASE tree ({path}/{store},
     pfx-partitioned, probe-prunable) and its INCREMENT tree
     ({path}/{store}_inc, written by write_postings: one small
@@ -1215,20 +1226,40 @@ def _read_store(spark, path: str, store: str, columns: list[str]):
     per non-empty prefix (~500 for a toy batch — the r7 daemon soak
     measured per-batch walls growing 12 -> 26 s from exactly this);
     minhash_index_compact folds them into the base. Returns None when
-    neither tree exists. Prefix predicates pushed on the returned frame
-    partition-prune the base and row-filter the (small) increments."""
+    neither tree exists.
+
+    The base's layout varies by release (flat or ingest_batch=
+    signatures, the r7-interim content-only hash store), so its schema
+    is inferred from its footers. The increments are only ever written
+    by write_postings, so they are read under their declared schemas
+    (schemas.BANDED_INC / SIGS_INC / HASHES_INC) and cost no inference
+    job; a _SUCCESS-only increment tree (an all-duplicate batch) reads
+    as zero rows.
+
+    `base_filter()` is called only when the base tree is read, and its
+    predicate applies to the base alone. The probes pass their prefix
+    IN-list this way: a partition filter on the pfx-partitioned base,
+    and on the increments a row filter their broadcast join already
+    applies — so an index of increments only (curate's, which never
+    compacts) never pays the driver action that builds the list."""
     parts = []
-    for suffix in ("", "_inc"):
-        df = _try_read_parquet(spark, f"{path}/{store}{suffix}")
-        if df is not None:
-            if store == "hashes" and "content_hash" in df.columns:
-                # r7-interim v3 layout: content-only, no kind column
-                df = df.select(
-                    F.col("content_hash").alias("hash"),
-                    F.lit("content").alias("kind"),
-                    "hpfx",
-                )
-            parts.append(df.select(*columns))
+    base = _try_read_parquet(spark, f"{path}/{store}")
+    if base is not None:
+        if store == "hashes" and "content_hash" in base.columns:
+            # r7-interim v3 layout: content-only, no kind column
+            base = base.select(
+                F.col("content_hash").alias("hash"),
+                F.lit("content").alias("kind"),
+                "hpfx",
+            )
+        base = base.select(*columns)
+        if base_filter is not None:
+            base = base.where(base_filter())
+        parts.append(base)
+    inc_p = f"{path}/{store}_inc"
+    if path_exists(spark, inc_p):
+        inc = spark.read.schema(_INC_SCHEMAS[store]).parquet(inc_p)
+        parts.append(inc.select(*columns))
     if not parts:
         return None
     out = parts[0]
@@ -1244,9 +1275,12 @@ def exact_hash_probe(spark, path: str, batch_sigs: DataFrame) -> DataFrame:
     est_jaccard exactly 1.0 in the banded tier, so anti-joining them away
     first leaves the keep-set unchanged for any threshold <= 1 while the
     quadratic template-bucket candidate work disappears). Same serve
-    shape as the banded probe — the bounded distinct hash-prefix IN-list
-    prunes the store scan to the partitions the batch's hashes can live
-    in, and the batch side is BROADCAST so the store never shuffles.
+    shape as the banded probe — when the index has a compacted base, a
+    bounded driver action collects the batch's distinct hash prefixes
+    and the IN-list prunes the base scan to the partitions those hashes
+    can live in (an increments-only index skips that action, see
+    _read_store), and the batch side is BROADCAST so the store never
+    shuffles.
     Returns a one-column (doc_id) frame; an empty frame when the index
     predates the hash store (schema v2 and earlier); an r7-interim v3
     store (content_hash column, no kind) degrades to content-only
@@ -1256,11 +1290,17 @@ def exact_hash_probe(spark, path: str, batch_sigs: DataFrame) -> DataFrame:
     doc vs 16 posting rows), so the exact tier is never the probe's
     dominant term."""
     bh = _batch_hash_frame(batch_sigs)
-    idx = _read_store(spark, path, "hashes", ["kind", "hash", "hpfx"])
+    idx = _read_store(
+        spark,
+        path,
+        "hashes",
+        ["kind", "hash", "hpfx"],
+        base_filter=lambda: F.col("hpfx").isin(
+            [r["hpfx"] for r in bh.select("hpfx").distinct().collect()]
+        ),
+    )
     if idx is None:
         return bh.select("doc_id").limit(0)
-    pfxs = [r["hpfx"] for r in bh.select("hpfx").distinct().collect()]
-    idx = idx.where(F.col("hpfx").isin(pfxs))
     return (
         idx.join(
             F.broadcast(bh),
@@ -1325,11 +1365,14 @@ def minhash_probe_index(
     Scale shape (the whole point): the batch side is SMALL relative to
     the corpus, so the batch's banded frame is BROADCAST and the index
     never shuffles — each scan task tests its own posting rows against
-    the in-memory batch buckets. Before that, the probe collects its
-    bounded distinct bucket-prefix list (<= 256 values, model-parameter
-    sized) and pushes it as a partition filter, so a small batch reads a
-    small fraction of the index files. Corpus work per probe is
-    O(index partitions touched), not O(corpus).
+    the in-memory batch buckets. When the index has a compacted base,
+    the probe first collects its bounded distinct bucket-prefix list
+    (<= 256 values, model-parameter sized) and pushes it as a partition
+    filter on the base, so a small batch reads a small fraction of the
+    base files. Corpus work per probe is O(index partitions touched),
+    not O(corpus). The increments carry the prefix as a data column,
+    where the IN-list would only repeat the broadcast join's own filter,
+    so an increments-only index skips the collect (see _read_store).
 
     Honest worst case: a batch with >= ~500 distinct buckets covers all
     256 prefixes and the filter prunes nothing — the probe then costs
@@ -1340,31 +1383,38 @@ def minhash_probe_index(
     Verbatim-copy traffic should be removed first via exact_hash_probe
     (exact tier) so it never inflates bucket hit counts.
     """
-    # ONE eager materialization: the compact signature frame (the only
-    # Python stage). The banded expansion below is cheap codegen'd array
-    # work both consumers (the pfx IN-list collect, the broadcast join
-    # side) re-derive from the checkpointed blocks — a second eager
-    # checkpoint of the 16x-exploded band frame bought nothing but a
-    # fixed extra job per probe, which the streaming daemon pays per
-    # micro-batch (r6 bench: probe wall ~all fixed job setup).
+    # ONE materialization: the compact signature frame (the only Python
+    # stage). The banded expansion below is cheap codegen'd array work
+    # its consumers (the pfx IN-list collect, the broadcast join side)
+    # re-derive from the checkpointed blocks — a second eager checkpoint
+    # of the 16x-exploded band frame bought nothing but a fixed extra
+    # job per probe, which the streaming daemon pays per micro-batch
+    # (r6 bench: probe wall ~all fixed job setup).
     if sigs is not None:
         bsigs = sigs
     else:
         # hash columns pruned pre-checkpoint (see minhash_lsh_pairs) —
         # the standalone probe's exact tier is the CALLER's composition.
-        # LAZY (r15): the bounded pfx-list collect below is the first
-        # action and holds this frame exactly once — it runs the Python
-        # signature pass, persists the blocks, and returns the prefix
-        # list in one job (the eager form paid a separate job first).
+        # LAZY (r15): the first action over it (the pfx-list collect on
+        # an index with a base, else the caller's) runs the Python
+        # signature pass and persists the blocks in the same job.
         bsigs = minhash_signatures(
             fan_out(new_docs), text_col, k, num_hashes, seed
         ).select("doc_id", "minhash").localCheckpoint(eager=False)
     bband = _banded_frame(bsigs, num_hashes, bands).withColumn(
         "pfx", F.substring("bucket", 1, 2)
     )
-    # Bounded driver action: the distinct prefix IN-list (<= 256 strings).
-    pfxs = [r["pfx"] for r in bband.select("pfx").distinct().collect()]
-    store = _read_store(spark, path, "banded", ["doc_id", "band", "bucket", "pfx"])
+    # Bounded driver action, run only against a base: the distinct
+    # prefix IN-list (<= 256 strings).
+    store = _read_store(
+        spark,
+        path,
+        "banded",
+        ["doc_id", "band", "bucket", "pfx"],
+        base_filter=lambda: F.col("pfx").isin(
+            [r["pfx"] for r in bband.select("pfx").distinct().collect()]
+        ),
+    )
     csigs_store = _read_store(spark, path, "sigs", ["doc_id", "minhash"])
     if store is None or csigs_store is None:
         # index holds no rows yet (e.g. every batch so far was all-dup):
@@ -1374,9 +1424,8 @@ def minhash_probe_index(
             "new_doc_id long, corpus_doc_id long, n_bands_matched long, "
             "est_jaccard double",
         )
-    idx = store.where(F.col("pfx").isin(pfxs))
     cand = (
-        idx.alias("c")
+        store.alias("c")
         .join(
             F.broadcast(bband.alias("n")),
             (F.col("c.band") == F.col("n.band"))
@@ -1467,10 +1516,12 @@ def incremental_dedup_keep(
 
     Materialization posture (each step is the cheapest that still runs
     upstream work once): the exact-probe survivors are eager; their
-    signatures are lazy (the near probe's bounded prefix collect
-    materializes them); the near-probe survivors are eager; the
-    within-batch signatures are lazy (the pairing build's detection
-    count materializes them); the returned keep-list is eager.
+    signatures are lazy (the near probe's first action materializes
+    them: its bounded prefix collect on an index with a base, else the
+    near-probe survivors' checkpoint); the near-probe survivors are
+    eager; the within-batch signatures are lazy (the pairing build's
+    detection count materializes them); the returned keep-list is
+    eager.
 
     `mark(stage)` is called as each sub-stage finishes ('exact_probe',
     'near_probe', 'within') so callers can time the tiers. Returns the
@@ -1656,9 +1707,6 @@ def minhash_index_compact(
         swap_into_place,
     )
 
-    def _count_files(p: str) -> int:
-        return count_parquet_files(spark, p)
-
     DATA_COLS = {
         "banded": ["doc_id", "band", "bucket"],
         "sigs": None,  # keep whatever signature columns the store carries
@@ -1735,7 +1783,9 @@ def minhash_index_compact(
             if streaming:  # tags collapsed -> dedup hashes across them
                 df = df.distinct()
             df = df.withColumn("hpfx", F.substring("hash", 1, 2))
-        before = _count_files(base_p) + _count_files(inc_p)
+        before = count_parquet_files(spark, base_p) + count_parquet_files(
+            spark, inc_p
+        )
         if store == "sigs":
             writer = df.coalesce(max(1, before // 8))
             part_cols: list[str] = []
@@ -1757,7 +1807,11 @@ def minhash_index_compact(
                 delete_path(spark, f"{inc_p}/ingest_batch={t_}")
         else:
             delete_path(spark, inc_p)
-        out[store] = (before, _count_files(base_p) + _count_files(inc_p))
+        out[store] = (
+            before,
+            count_parquet_files(spark, base_p)
+            + count_parquet_files(spark, inc_p),
+        )
     return out
 
 

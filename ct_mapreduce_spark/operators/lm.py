@@ -540,7 +540,9 @@ def lm_gate_model(
 
     Persisted layout: the unigram table at `model_path`; at order 2 the
     bigram table at the SIBLING path `{model_path}_bi` (a subdirectory
-    would corrupt the unigram parquet read). A persisted model is loaded
+    would corrupt the unigram parquet read). Both are read back under
+    their declared schemas (schemas.LM_UNIGRAM, schemas.LM_BIGRAM), so a
+    load submits no footer-inference job. A persisted model is loaded
     (existence checked through the Hadoop FileSystem API, so remote
     paths load too). Asking order 2 of a model persisted at order 1 is a
     hard error, never a silent unigram fallback.
@@ -551,10 +553,11 @@ def lm_gate_model(
     runs score under the SAME model. Without `reference` a missing model
     is an error: serve-only callers (the dedup daemon) never train."""
     from ct_mapreduce_spark.fsutil import path_exists
+    from ct_mapreduce_spark.schemas import LM_BIGRAM, LM_UNIGRAM
 
     bi_path = None if model_path is None else model_path + "_bi"
     if model_path is not None and path_exists(spark, model_path + "/_SUCCESS"):
-        model = spark.read.parquet(model_path)
+        model = spark.read.schema(LM_UNIGRAM).parquet(model_path)
         if order != 2:
             return model, None
         if not path_exists(spark, bi_path + "/_SUCCESS"):
@@ -564,7 +567,7 @@ def lm_gate_model(
                 "Delete the lm_model artifact to retrain both, "
                 "or run with lm_order=1."
             )
-        return model, spark.read.parquet(bi_path)
+        return model, spark.read.schema(LM_BIGRAM).parquet(bi_path)
     if reference is None:
         raise ValueError(
             f"no persisted language model at {model_path}: train one "
@@ -577,8 +580,8 @@ def lm_gate_model(
         model, bi = lm_train_unigram(ref, min_count=2), None
     if model_path is not None:
         model.coalesce(1).write.mode("overwrite").parquet(model_path)
-        model = spark.read.parquet(model_path)
+        model = spark.read.schema(LM_UNIGRAM).parquet(model_path)
         if bi is not None:
             bi.coalesce(1).write.mode("overwrite").parquet(bi_path)
-            bi = spark.read.parquet(bi_path)
+            bi = spark.read.schema(LM_BIGRAM).parquet(bi_path)
     return model, bi

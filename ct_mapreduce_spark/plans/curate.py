@@ -37,6 +37,15 @@ blocks are freed by the ContextCleaner, and rather than observe() so the
 materialized frame ALSO serves the reuse (observe would fix the counts
 but leave the recomputation).
 
+The driver pays no round-trip a drop can do without. Every artifact the
+plan writes and reads back itself — the LM gate model, eval_grams, the
+index increments — is read under its declared schema (schemas.py), so
+no read submits a footer-inference job. The index probes collect their
+prefix IN-list only when the index has a compacted base, and this plan
+never compacts, so its index is increments only. The shard count is an
+Observation on the manifest write (where a single-pass write can carry
+the count, observe is the right tool), not a re-read of the manifest.
+
 Each drop writes into its own namespace — {workdir}/export/drop=<tag>/
 and {workdir}/manifest/drop=<tag>/ (tag auto-increments from the dirs
 already present, or pass drop_tag explicitly to make a re-run of the
@@ -52,8 +61,10 @@ import os
 import re
 import time
 
-from pyspark.sql import SparkSession
+from pyspark.sql import Observation, SparkSession
 from pyspark.sql import functions as F
+
+from ct_mapreduce_spark.schemas import EVAL_GRAMS
 
 
 def _artifact_exists(spark: SparkSession, path: str) -> bool:
@@ -333,18 +344,14 @@ def curate_crawl(
         # at {workdir}/eval_grams across drops (built once per suite).
         grams_path = os.path.join(workdir, "eval_grams")
         if _artifact_exists(spark, grams_path):
-            bench_grams = spark.read.parquet(grams_path)
+            # the layout this plan writes below, declared: no
+            # footer-inference job per drop
+            bench_grams = spark.read.schema(EVAL_GRAMS).parquet(grams_path)
             # The dictionary is only valid at the k it was shingled with:
             # probing k'-grams against a k-gram dictionary silently yields
             # ~zero hits — a decontamination gate that LOOKS green while
             # letting eval data through. The k column is constant (one
             # value per artifact), so the check is a metadata-sized read.
-            if "k" not in bench_grams.columns:
-                raise ValueError(
-                    f"eval_grams artifact at {grams_path} predates "
-                    "k-tagging; delete it to re-shingle the suite at "
-                    f"decontam_k={decontam_k}"
-                )
             stored_k = bench_grams.select("k").first()
             if stored_k is None:
                 # zero-row artifact: the suite yielded no shingles (no
@@ -358,6 +365,14 @@ def curate_crawl(
                     "suite files and delete the artifact to re-shingle"
                 )
             stored_k = stored_k[0]
+            if stored_k is None:
+                # the declared schema reads an artifact written before
+                # k-tagging (no k column) with k null
+                raise ValueError(
+                    f"eval_grams artifact at {grams_path} predates "
+                    "k-tagging; delete it to re-shingle the suite at "
+                    f"decontam_k={decontam_k}"
+                )
             if stored_k != int(decontam_k):
                 raise ValueError(
                     f"eval_grams at {grams_path} was shingled with "
@@ -378,7 +393,7 @@ def curate_crawl(
                 .write.mode("overwrite")
                 .parquet(grams_path)
             )
-            bench_grams = spark.read.parquet(grams_path)
+            bench_grams = spark.read.schema(EVAL_GRAMS).parquet(grams_path)
         hits = dedup_fuzzy.contamination_hits(
             good, k=decontam_k, bench_grams=bench_grams.select("shingle")
         ).where(F.col("n_hits") > int(decontam_max_hits))
@@ -551,9 +566,14 @@ def curate_crawl(
     )
     manifest_path = os.path.join(workdir, "manifest", f"drop={drop_tag}")
     export_path = os.path.join(workdir, "export", f"drop={drop_tag}")
-    manifest.write.mode("overwrite").parquet(manifest_path)
+    # the shard count rides the manifest write (one manifest row per
+    # shard) instead of a re-read and count of what was just written
+    shard_rows = Observation("manifest")
+    manifest.observe(shard_rows, F.count(F.lit(1)).alias("n")).write.mode(
+        "overwrite"
+    ).parquet(manifest_path)
     text_source.write_jsonl_gz(balanced, export_path, n_shards=n_export_shards)
-    n_shards = spark.read.parquet(manifest_path).count()
+    n_shards = shard_rows.get["n"]
     _mark("pack_export")
     stats = {
         "drop_tag": drop_tag,

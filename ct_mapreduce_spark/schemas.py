@@ -14,6 +14,16 @@ Mapping (see SURVEY.md §1.2):
                                           -> `STORE_KEYS`
 - per-(issuer, expDate) SCARD lines (storage-statistics.go:49-55)
                                           -> `LEAF_COUNTS`
+
+Tables of the LLM-data half that the engine writes and reads back itself
+(no reference counterpart; declared so a read pays no footer inference):
+- perplexity-gate model (operators/lm.py:lm_gate_model)
+                                          -> `LM_UNIGRAM`, `LM_BIGRAM`
+- benchmark-decontamination dictionary (plans/curate.py eval_grams)
+                                          -> `EVAL_GRAMS`
+- MinHash index increments (operators/dedup_fuzzy.py:write_postings)
+                                          -> `BANDED_INC`, `SIGS_INC`,
+                                             `HASHES_INC`
 """
 
 from __future__ import annotations
@@ -76,6 +86,66 @@ LEAF_COUNTS = T.StructType(
         T.StructField("exp_date", T.StringType(), True),
         T.StructField("n_serials", T.LongType(), True),
         T.StructField("n_rows", T.LongType(), True),
+    ]
+)
+
+# The perplexity gate's persisted model (operators/lm.py:lm_gate_model):
+# the unigram table at `{lm_model}` (OOV row included) and, at order 2,
+# the bigram table at `{lm_model}_bi`.
+LM_UNIGRAM = T.StructType(
+    [
+        T.StructField("token", T.StringType(), True),
+        T.StructField("n", T.LongType(), True),
+        T.StructField("logp_micro", T.LongType(), True),
+    ]
+)
+LM_BIGRAM = T.StructType(
+    [
+        T.StructField("w1", T.StringType(), True),
+        T.StructField("w2", T.StringType(), True),
+        T.StructField("n", T.LongType(), True),
+        T.StructField("logs_micro", T.LongType(), True),
+    ]
+)
+
+# The eval-suite gram dictionary curate persists at {workdir}/eval_grams:
+# distinct word k-grams tagged with the k they were shingled at. An
+# artifact from before k-tagging reads back with k null.
+EVAL_GRAMS = T.StructType(
+    [
+        T.StructField("shingle", T.StringType(), True),
+        T.StructField("k", T.IntegerType(), True),
+    ]
+)
+
+# The MinHash index's per-batch increment trees ({index}/{store}_inc,
+# operators/dedup_fuzzy.py:write_postings), partitioned by the batch tag.
+# The tag is declared a string, so an all-numeric tag is not re-inferred
+# as an integer.
+BANDED_INC = T.StructType(
+    [
+        T.StructField("doc_id", T.LongType(), True),
+        T.StructField("band", T.IntegerType(), True),
+        T.StructField("bucket", T.StringType(), True),
+        T.StructField("pfx", T.StringType(), True),
+        T.StructField("ingest_batch", T.StringType(), True),
+    ]
+)
+SIGS_INC = T.StructType(
+    [
+        T.StructField("doc_id", T.LongType(), True),
+        T.StructField("minhash", T.ArrayType(T.LongType()), True),
+        T.StructField("content_hash", T.StringType(), True),
+        T.StructField("sig_hash", T.StringType(), True),
+        T.StructField("ingest_batch", T.StringType(), True),
+    ]
+)
+HASHES_INC = T.StructType(
+    [
+        T.StructField("kind", T.StringType(), True),
+        T.StructField("hash", T.StringType(), True),
+        T.StructField("hpfx", T.StringType(), True),
+        T.StructField("ingest_batch", T.StringType(), True),
     ]
 )
 

@@ -236,6 +236,97 @@ def test_minhash_index_probe_prunes_partitions(spark, docs, tmp_path):
     assert plan.count("Exchange hashpartitioning") <= 2, plan[:2000]
 
 
+def test_probe_prefix_list_only_against_a_base(spark, docs, tmp_path, action_jobs):
+    """The probes' prefix IN-list is a partition filter on the
+    pfx-partitioned BASE, bought with one collect per probe. An index of
+    increments only (write_postings; curate never compacts) has no base,
+    so neither probe may submit that collect: building either probe
+    frame runs no SQL action and no job at all. Once minhash_index_compact
+    has folded the increments into a base, the collect comes back and
+    the base scan shows the IN-list under PartitionFilters."""
+    corpus = docs.where(F.col("doc_id") % 10 != 0)
+    batch = docs.where(F.col("doc_id") < 3)
+    bsigs = dedup_fuzzy.minhash_signatures(batch).localCheckpoint(eager=True)
+    idx = str(tmp_path / "mh_inc_only")
+    dedup_fuzzy.write_postings(corpus, idx, batch_tag="seed")
+    probes = (
+        ("hpfx", lambda: dedup_fuzzy.exact_hash_probe(spark, idx, bsigs)),
+        (
+            "pfx",
+            lambda: dedup_fuzzy.minhash_probe_index(spark, idx, batch, sigs=bsigs),
+        ),
+    )
+    want = {}
+    for col, build in probes:
+        out, jobs, sql = action_jobs(f"inc-only-{col}", build)
+        assert (jobs, sql) == ([], []), (col, jobs, sql)
+        want[col] = sorted(tuple(r) for r in out.collect())
+    # both probes find rows, so the comparison after compaction is not
+    # vacuous (docs 1 and 2 are indexed verbatim: exact-tier hits)
+    assert want["hpfx"] and want["pfx"]
+
+    dedup_fuzzy.minhash_index_compact(spark, idx)
+    for col, build in probes:
+        out, _, sql = action_jobs(f"compacted-{col}", build)
+        assert len(sql) == 1, (col, sql)  # the prefix collect
+        assert sorted(tuple(r) for r in out.collect()) == want[col]
+        out.write.format("noop").mode("overwrite").save()
+        plan = out._jdf.queryExecution().executedPlan().toString()
+        assert any(
+            f"PartitionFilters: [{col}" in l and ("INSET" in l or " IN (" in l)
+            for l in plan.splitlines()
+        ), f"compacted base scan lost the {col} IN-list:\n" + plan[:2000]
+
+
+def test_self_written_artifacts_match_declared_schemas(spark, tmp_path):
+    """Tables a curate drop writes and reads back itself are read under
+    declared schemas (schemas.py), with no footer inference. Each is
+    written here by its real writer and its inferred schema must equal
+    the declared one, so a writer that renames or retypes a column fails
+    here instead of reading back as nulls."""
+    import json
+
+    from ct_mapreduce_spark import schemas
+    from ct_mapreduce_spark.operators.lm import lm_gate_model
+    from ct_mapreduce_spark.plans.curate import curate_crawl
+    from ct_mapreduce_spark.sources import text_source
+
+    def inferred(p):
+        return spark.read.parquet(p).schema
+
+    ref = spark.createDataFrame(
+        [(i, f"alpha beta gamma delta word{i % 3} beta gamma") for i in range(12)],
+        "doc_id long, text string",
+    )
+    for order in (1, 2):
+        model = str(tmp_path / f"lm{order}")
+        _, bi = lm_gate_model(spark, model, order, reference=lambda: ref)
+        assert inferred(model) == schemas.LM_UNIGRAM
+        if order == 2:
+            assert bi is not None
+            assert inferred(model + "_bi") == schemas.LM_BIGRAM
+
+    idx = str(tmp_path / "idx")
+    dedup_fuzzy.write_postings(ref, idx, batch_tag="drop-0000")
+    for store, declared in (
+        ("banded_inc", schemas.BANDED_INC),
+        ("sigs_inc", schemas.SIGS_INC),
+        ("hashes_inc", schemas.HASHES_INC),
+    ):
+        assert inferred(f"{idx}/{store}") == declared, store
+
+    crawl = str(tmp_path / "c")
+    text_source.synthetic_warc_html_fixture(crawl, n=8)
+    suite = tmp_path / "suite"
+    suite.mkdir()
+    (suite / "bench.jsonl").write_text(
+        json.dumps({"text": "one two three four five six seven eight nine"})
+    )
+    wd = str(tmp_path / "wd")
+    curate_crawl(spark, crawl, wd, quality_min=0.0, eval_suite=str(suite))
+    assert inferred(wd + "/eval_grams") == schemas.EVAL_GRAMS
+
+
 def test_minhash_estimate_tracks_exact(spark, docs):
     """est_jaccard from signature agreement should correlate with exact J
     on flagged pairs (loose band: +-0.25 absolute)."""
@@ -1893,7 +1984,7 @@ def test_run_parallel_keeps_callers_job_group(spark, action_jobs):
     from ct_mapreduce_spark.operators.util import run_parallel
 
     rdd = spark.sparkContext.parallelize(range(8), 2)
-    _, jobs = action_jobs("run-parallel", lambda: run_parallel(rdd.count, rdd.sum))
+    _, jobs, _ = action_jobs("run-parallel", lambda: run_parallel(rdd.count, rdd.sum))
     assert len(jobs) == 2
 
 

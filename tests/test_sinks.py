@@ -251,7 +251,7 @@ def test_append_cycle_job_count(spark, tmp_path, action_jobs):
         update_leaf_counts(spark, leaf, fresh)
         return n
 
-    n, jobs = action_jobs("append-cycle", cycle)
+    n, jobs, _ = action_jobs("append-cycle", cycle)
     assert n > 0
     assert len(jobs) == 1
 

@@ -8,6 +8,7 @@ import json
 import os
 from pathlib import Path
 
+import pytest
 from pyspark.sql import functions as F
 
 from ct_mapreduce_spark.sources.text_source import (
@@ -224,7 +225,12 @@ def test_crawl_pipeline_two_drops(spark, tmp_path):
     assert s1["extracted"] == 48
     assert 0 < s1["after_dedup"] <= s1["quality_survivors"]
     assert 0 < s1["after_mixture"] <= s1["after_dedup"]
+
+    def manifest(tag):
+        return spark.read.parquet(f"{wd}/manifest/drop={tag}")
+
     assert s1["shards"] >= 1
+    assert s1["shards"] == manifest("drop-0000").count()
     exported = spark.read.option("compression", "gzip").json(
         wd + "/export/drop=drop-0000"
     )
@@ -236,6 +242,7 @@ def test_crawl_pipeline_two_drops(spark, tmp_path):
     assert s2["drop_tag"] == "drop-0001"
     assert s2["extracted"] == 48
     assert s2["after_dedup"] == 0  # every re-crawled page is a known dup
+    assert s2["shards"] == manifest("drop-0001").count()
     # drop 2 wrote its OWN namespace; drop 1's export is untouched (the
     # r6 overwrite bug: a second drop used to delete the first's shards)
     assert (
@@ -287,11 +294,16 @@ def test_curate_second_drop_job_count(spark, tmp_path, action_jobs):
     design (an eager one is its own action job, a lazy one rides the
     next action), so a posture change shows up here as a different
     count. The index fold writes one increment per drop, so no probe
-    pays a listing job over the base's prefix directories. The fold's
+    pays a listing job over the base's prefix directories. The index
+    holds increments only, which are read under declared schemas (no
+    footer-inference job) and which no probe prunes with a collected
+    prefix list; the shard count rides the manifest write. The fold's
     concurrent writes run in the drop's job group, so the two of them
     that run outside adaptive execution (no exchange in their plans) are
-    counted. Jobs of adaptive execution's query stages are not (see the
-    action_jobs fixture)."""
+    counted. Jobs of adaptive execution's query stages are not; the SQL
+    actions those jobs belong to are pinned as a count of root SQL
+    executions instead, so a doubled count, collect or write fails here
+    too (see the action_jobs fixture)."""
     from ct_mapreduce_spark.plans.curate import curate_crawl
     from ct_mapreduce_spark.sources import text_source
 
@@ -313,12 +325,50 @@ def test_curate_second_drop_job_count(spark, tmp_path, action_jobs):
     crawl2 = tmp_path / "c2"
     crawl2.mkdir()
     (crawl2 / "seg-000.warc").write_bytes(text_source.encode_warc(recs))
-    stats, actions = action_jobs(
+    stats, actions, sql_actions = action_jobs(
         "curate-second-drop", lambda: curate_crawl(spark, str(crawl2), wd)
     )
     assert stats["extracted"] == 40
     assert stats["after_dedup"] == 16  # only the 16 new pages survive
-    assert len(actions) == 21
+    assert len(actions) == 10
+    assert len(sql_actions) == 19
+
+
+@pytest.mark.parametrize(
+    "artifact, message",
+    [
+        ("no_k", "predates k-tagging"),
+        ("empty", "is EMPTY"),
+        ("k5", "was shingled with k=5 but this run asked decontam_k=8"),
+    ],
+)
+def test_curate_rejects_unusable_eval_grams(spark, tmp_path, artifact, message):
+    """A persisted eval_grams dictionary that cannot serve this run's
+    decontamination is refused with its own message, never probed: one
+    written before k-tagging (no k column; the declared read sees k
+    null), one with zero rows (the suite produced no shingles), and one
+    shingled at another k (probing 8-grams against 5-grams scores ~zero
+    hits, a gate that looks green while leaking)."""
+    from ct_mapreduce_spark.plans.curate import curate_crawl
+    from ct_mapreduce_spark.sources import text_source
+
+    rows = {
+        "no_k": ([("a b c d e f g h",)], "shingle string"),
+        "empty": ([], "shingle string, k int"),
+        "k5": ([("a b c d e", 5)], "shingle string, k int"),
+    }[artifact]
+    wd = tmp_path / "wd"
+    spark.createDataFrame(*rows).coalesce(1).write.parquet(str(wd / "eval_grams"))
+    crawl = str(tmp_path / "c")
+    text_source.synthetic_warc_html_fixture(crawl, n=8)
+    with pytest.raises(ValueError, match=message):
+        curate_crawl(
+            spark,
+            crawl,
+            str(wd),
+            quality_min=0.0,
+            eval_suite=str(tmp_path / "unread_suite"),
+        )
 
 
 def test_fold_over_flat_index_keeps_flat_signatures(spark, tmp_path):
